@@ -156,12 +156,7 @@ object HybridSearch {
     val spark = postings.sparkSession
     import spark.implicits._
     val unionTerms = queries.flatMap(_._2).distinct
-    val buckets = unionTerms.map(TextStats.termBucketOf).distinct
-    val tf = postings
-      .filter(col("tb").isin(buckets: _*) && col("term").isin(unionTerms: _*))
-      .groupBy("term", "doc_id")
-      .agg(max("tf").as("tf"), max("dl").as("dl"))
-      .localCheckpoint()
+    val tf = TextStats.postingsTf(postings, unionTerms).localCheckpoint()
     val stats = TextStats.corpusStatsFromLedger(statsLedger)
     val qt = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
       .toDF("q_id", "term")

@@ -166,10 +166,12 @@ object TextStats {
     * curation (rank-then-keep against a topical seed query).
     *
     * Scale shape: term frequencies are computed AFTER filtering the
-    * exploded token stream to the |terms| query terms, so the one shuffle
-    * is keyed on (doc, term) over matching tokens only — corpus width
-    * never hits an exchange. Document frequencies and the corpus-level
-    * (N, avgdl) are dim-sized aggregates joined back via broadcast.
+    * exploded token stream to the |terms| query terms, so every shuffle
+    * carries matching tokens only — corpus width never hits an exchange.
+    * Document frequencies are a window count over the term-keyed tf rows
+    * ([[bm25ScoredTerms]]), which counts each doc once because doc_ids
+    * are unique in `docs`; the corpus-level (N, avgdl) is a 1-row
+    * aggregate joined by broadcast.
     *
     * Determinism: the per-term partial scores are summed in the FIXED
     * order of `terms` (an explicit coalesce chain, not a float `sum()`
@@ -179,6 +181,7 @@ object TextStats {
     * on the 6-dp-rounded score with doc_id tiebreak. */
   def bm25(docs: org.apache.spark.sql.DataFrame, terms: Seq[String],
       topN: Int): org.apache.spark.sql.DataFrame = {
+    require(terms.nonEmpty, "empty query")
     val toks = docs.select(
       col("doc_id"),
       filter(split(lower(col("text")), "[^a-z]+"), t => length(t) > 0).as("toks"))
@@ -196,8 +199,8 @@ object TextStats {
   /** The shared scoring tail of [[bm25]] and [[bm25FromIndex]] — ONE
     * expression tree, so the index-served path is bit-identical to the
     * corpus-direct path by construction, not by parallel maintenance.
-    * `tf` carries (doc_id, dl, term, tf) for the query terms only;
-    * `stats` is the 1-row (n_docs, avgdl) frame. */
+    * `tf` carries (doc_id, dl, term, tf) for the query terms only, one
+    * row per (term, doc_id); `stats` is the 1-row (n_docs, avgdl) frame. */
   private def bm25Rank(tf: org.apache.spark.sql.DataFrame,
       stats: org.apache.spark.sql.DataFrame, terms: Seq[String],
       topN: Int): org.apache.spark.sql.DataFrame =
@@ -212,19 +215,30 @@ object TextStats {
     * tf term as ONE expression tree shared by [[bm25Rank]] (single-query
     * forms) and [[HybridSearch.hybridRrfBatchFromIndex]] (the batched
     * serve) — so the two Spark forms cannot drift on the formula or its
-    * constants. `tf` carries (term, doc_id, tf, dl); `stats` the 1-row
-    * (n_docs, avgdl). */
+    * constants. `tf` carries (term, doc_id, tf, dl) with ONE row per
+    * (term, doc_id); `stats` is the 1-row (n_docs, avgdl) frame, joined
+    * by broadcast.
+    *
+    * Because rows are unique per (term, doc_id), the document frequency
+    * is `count(1) over (partition by term)` — no count(distinct) Expand,
+    * no second pass over `tf`, no join back. When `tf` already arrives
+    * hash-partitioned on term ([[postingsTf]]) the window adds no
+    * exchange either. The trade: each task holds one query term's whole
+    * (pruned, deduped) posting list, the unit a term-at-a-time engine
+    * reads anyway; a common query term makes a long list. Only the query
+    * terms are partitioned this way — not every key of the corpus, as in
+    * the gram-partitioned window PlanShapeSpec bans for
+    * text_ngram_dupspans. */
   private[graft] def bm25ScoredTerms(tf: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val dfreq = tf.groupBy("term").agg(countDistinct("doc_id").as("dfreq"))
-    tf.join(broadcast(dfreq), "term")
+      stats: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    tf.withColumn("dfreq",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("term")))
       .crossJoin(broadcast(stats))
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("dfreq") + lit(0.5)) / (col("dfreq") + lit(0.5))))
       .withColumn("sc",
         col("idf") * ((col("tf") * lit(2.2)) /
           (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl"))))))
-  }
 
   /** The FIXED-ORDER per-document score sum over `terms` (an explicit
     * coalesce chain, not a float `sum()` aggregate) — bit-stable across
@@ -236,6 +250,7 @@ object TextStats {
   /** The DuckDB twin of [[bm25]] — same expression tree, same pinned
     * summation order, same (1 - b) = 0.25 constant folding. */
   def bm25Sql(terms: Seq[String], topN: Int): String = {
+    require(terms.nonEmpty, "empty query")
     // SQL string-literal escaping, so a term like "don't" can't break the
     // oracle while the Spark isin() side accepts it
     def q(t: String) = "'" + t.replace("'", "''") + "'"
@@ -447,11 +462,15 @@ object TextStats {
   }
 
   /** The 1-row (n_docs, avgdl) frame from the corpus-stats ledger
-    * component: O(batches) rows, replay duplicates dropped full-row. The
-    * double division Σsum_dl / Σn_docs is bit-identical to `avg(dl)` over
-    * doclens (exact integer sums below 2⁵³ — [[Bm25StatsSchema]]); an
-    * empty ledger yields (0, NULL), exactly what count/avg give on an
-    * empty doclens scan, so cold start is unchanged.
+    * component, computed on the DRIVER: the ledger's O(batches) rows are
+    * collected (one small job, no exchange), replay duplicates dropped
+    * full-row, and Σsum_dl / Σn_docs taken as one double division —
+    * bit-identical to `avg(dl)` over doclens (exact integer sums below
+    * 2⁵³ — [[Bm25StatsSchema]]). An empty ledger yields (0, NULL),
+    * exactly what count/avg give on an empty doclens scan, so cold start
+    * is unchanged. The frame is a local relation, so it SNAPSHOTS the
+    * ledger at call time: batches committed after this call are not seen
+    * by plans built on the returned frame.
     *
     * PRECONDITION (the snapshot ≡ doclens equivalence): doc_ids are
     * unique ACROSS clean batches — [[bm25IngestBatch]]'s standing ingest
@@ -464,10 +483,21 @@ object TextStats {
     * ledger rows differ by batch_id). Upstream dedup owns that
     * invariant, exactly as it owns it for every other ingest family. */
   def corpusStatsFromLedger(
-      statsLedger: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    statsLedger.dropDuplicates()
-      .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-        (sum("sum_dl").cast("double") / sum("n_docs").cast("double")).as("avgdl"))
+      statsLedger: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ledger = statsLedger.select("batch_id", "n_docs", "sum_dl").collect().distinct
+    val nDocs = ledger.map(_.getLong(1)).sum
+    val sumDl = ledger.map(_.getLong(2)).sum
+    val avgdl = if (nDocs == 0L) null else java.lang.Double.valueOf(sumDl.toDouble / nDocs.toDouble)
+    statsLedger.sparkSession.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(nDocs, avgdl)), CorpusStatsSchema)
+  }
+
+  /** Schema of the 1-row corpus-stats frame ([[corpusStatsFromLedger]]). */
+  private val CorpusStatsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("n_docs", LongType, nullable = false),
+      StructField("avgdl", DoubleType)))
+  }
 
   /** Proximity (slop) phrase search from the same positional component —
     * the query shape retrieval users reach for right after exact phrase:
@@ -556,23 +586,35 @@ object TextStats {
   /** BM25 served from the standing inverted index — bit-identical to
     * [[bm25]] over the same corpus by construction (shared [[bm25Rank]]
     * tail). The serve never touches document text OR the corpus-wide
-    * doclens component: the postings scan is partition-pruned to the
-    * query terms' buckets via DRIVER-computed literals ([[termBucketOf]]),
-    * and (n_docs, avgdl) come from the O(batches) stats ledger the ingest
-    * leg maintains ([[corpusStatsFromLedger]]) — so probe cost is
+    * doclens component: the postings are read once, partition-pruned to
+    * the query terms' buckets ([[postingsTf]]), and (n_docs, avgdl) come
+    * from a driver read of the O(batches) stats ledger the ingest leg
+    * maintains ([[corpusStatsFromLedger]]) — so probe cost is
     * O(postings of the query terms) + O(applied batches), independent of
-    * corpus size. Replay-duplicate tolerance (at-least-once appends):
-    * postings collapse by (term, doc_id) — duplicates are full-row
-    * identical — and ledger rows full-row, both tiny aggregates. */
+    * corpus size. Plan: pruned scan → one exchange on term → replay
+    * dedup → dfreq window → score → one exchange on doc_id → TakeOrdered;
+    * with the ledger read, five Spark jobs a query. */
   def bm25FromIndex(postings: org.apache.spark.sql.DataFrame,
       statsLedger: org.apache.spark.sql.DataFrame, terms: Seq[String],
       topN: Int): org.apache.spark.sql.DataFrame = {
+    require(terms.nonEmpty, "empty query")
+    bm25Rank(postingsTf(postings, terms), corpusStatsFromLedger(statsLedger), terms, topN)
+  }
+
+  /** The (term, doc_id, tf, dl) rows of `terms` from the postings
+    * component: the scan is partition-pruned to the terms' buckets via
+    * DRIVER-computed literals ([[termBucketOf]]), then ONE exchange on
+    * term feeds the replay dedup — at-least-once appends leave full-row
+    * identical duplicates, collapsed per (term, doc_id) — and leaves the
+    * rows term-partitioned for [[bm25ScoredTerms]]'s dfreq window. */
+  private[graft] def postingsTf(postings: org.apache.spark.sql.DataFrame,
+      terms: Seq[String]): org.apache.spark.sql.DataFrame = {
     val buckets = terms.map(termBucketOf).distinct
-    val tf = postings
+    postings
       .filter(col("tb").isin(buckets: _*) && col("term").isin(terms: _*))
+      .repartition(col("term"))
       .groupBy("term", "doc_id")
       .agg(max("tf").as("tf"), max("dl").as("dl"))
-    bm25Rank(tf, corpusStatsFromLedger(statsLedger), terms, topN)
   }
 
   /** Periodic repair of a replay-inflated index: full-row dedup of all

@@ -168,6 +168,110 @@ class Bm25IndexSpec extends SparkSpec {
       Seq("hash", "join")).count() == 0L)
   }
 
+  /** Spark jobs `body` issues, counted by a SparkListener on a job group
+    * of its own. A sentinel job run afterwards flushes the asynchronous
+    * listener bus: events reach a listener in order, so once the
+    * sentinel's start arrives every earlier job start has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"bm25-jobs-${System.nanoTime()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet(); ()
+          case g if g == s"$group-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-flush", "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("the index-served BM25 runs in at most five Spark jobs") {
+    val root = java.nio.file.Files.createTempDirectory("graft_b25j").toString
+    ingest(root, corpus.filter($"doc_id" <= 3), 0L)
+    ingest(root, corpus.filter($"doc_id" > 3), 1L)
+    serve(root).collect() // warm-up: the first action pays one-off costs
+    // plan construction is inside the count: the stats ledger is read on
+    // the driver when the serve is built, and that read is a job too
+    val n = jobsOf { serve(root).collect(); () }
+    assert(n > 0, "the listener saw no jobs: the count is not measuring")
+    assert(n <= 5, s"bm25FromIndex issued $n Spark jobs, want at most 5")
+  }
+
+  test("an empty query fails with a clear error on every BM25 form") {
+    val root = java.nio.file.Files.createTempDirectory("graft_b25e").toString
+    ingest(root, corpus, 0L)
+    Seq[() => Any](
+      () => TextStats.bm25(corpus, Nil, 5),
+      () => serve(root, Nil),
+      () => TextStats.bm25Sql(Nil, 5)).foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("empty query"), e.getMessage)
+    }
+  }
+
+  test("index-served BM25 and batched hybrid: same rows under any shuffle-partition count and with AQE off") {
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val clean = java.nio.file.Files.createTempDirectory("graft_b25i").toString
+    ingest(clean, docs.filter($"doc_id" % 2 === 0), 0L)
+    ingest(clean, docs.filter($"doc_id" % 2 === 1), 1L)
+    // replay-inflated: batch 1 re-delivered through the armor, then a torn
+    // re-delivery that appended its postings and nothing else
+    val inflated = java.nio.file.Files.createTempDirectory("graft_b25ii").toString
+    ingest(inflated, docs.filter($"doc_id" % 2 === 0), 0L)
+    (1 to 2).foreach(_ => ingest(inflated, docs.filter($"doc_id" % 2 === 1), 1L))
+    TextStats.postingRows(docs.filter($"doc_id" % 2 === 1)).write.mode("append")
+      .partitionBy("tb").parquet(s"$inflated/idx/postings")
+    val cold = java.nio.file.Files.createTempDirectory("graft_b25ic").toString
+    val quant = s"$clean/quant"
+    Similarity.buildQuantIndex(
+      spark.read.parquet(sf("sf0.001") + "/embeddings.parquet"), 16, quant)
+    val batch = Seq(0L -> Seq("hash", "join", "scan"),
+      1L -> Seq("vector", "absentterm"), 2L -> Seq("absentterm"))
+    def served(root: String): Seq[Seq[String]] = Seq(
+      rows(serve(root, terms, 20)),
+      rows(serve(root, Seq("stream", "absentterm"), 20)), // one term absent
+      rows(serve(root, Seq("absentterm"), 20)),           // every term absent
+      rows(HybridSearch.hybridRrfBatchFromIndex(
+        readP(s"$root/idx/postings", TextStats.PostingSchema),
+        readP(s"$root/idx/stats", TextStats.Bm25StatsSchema),
+        spark.read.parquet(quant), batch)))
+    def all(): Seq[Seq[Seq[String]]] = Seq(clean, inflated, cold).map(served)
+    val want = all()
+    val Seq(c, i, z) = want
+    assert(c(0).nonEmpty && c(1).nonEmpty && c(2).isEmpty && c(3).nonEmpty,
+      s"degenerate fixture: $c")
+    assert(c(0) == rows(TextStats.bm25(docs, terms, 20)))
+    assert(i == c, "the replay-inflated index serves differently from the clean one")
+    assert(z.take(3).forall(_.isEmpty), s"cold start served BM25 rows: $z")
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (aqe <- Seq("true", "false"); parts <- Seq("1", "7", "200")) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        assert(all() == want, s"results moved with shuffle.partitions=$parts, AQE=$aqe")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   // corpus-direct twin of phraseFromIndex, for equivalence pins
   private def directPhrase(docs: DataFrame, phrase: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -460,9 +460,27 @@ class PlanShapeSpec extends SparkSpec {
 
   test("text_bm25: corpus-stat joins all broadcast — no shuffle join on the token stream") {
     val plan = explained("text_bm25")
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    // the 1-row (n_docs, avgdl) frame is the only join, broadcast; dfreq
+    // is a window over the term-keyed tf rows, not a joined-back aggregate
+    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(!plan.contains("Expand") && !plan.contains("count(distinct"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("ShuffledHashJoin"), plan)
+  }
+
+  test("search_bm25_indexed: one pruned postings scan; no count(distinct); no doclens or ledger scan") {
+    val plan = explained("search_bm25_indexed")
+    val postingScans = plan.split("\n")
+      .count(l => l.contains("FileScan") && l.contains("/idx/postings"))
+    assert(postingScans == 1, s"$postingScans postings scans, want exactly one:\n$plan")
+    // dfreq is a window over the deduped term-keyed rows, not a
+    // count(distinct) aggregate (its Expand and two extra exchanges)
+    assert(!plan.contains("Expand") && !plan.contains("count(distinct"), plan)
+    // (n_docs, avgdl) come from a driver read of the stats ledger: the
+    // plan scans neither the doclens component nor the ledger
+    assert(!plan.contains("doclens") && !plan.contains("/idx/stats"), plan)
+    assert("PartitionFilters: \\[[^\\]]*tb".r.findFirstIn(plan).isDefined,
+      s"no non-empty tb partition-filter list in the postings scan:\n$plan")
   }
 
   // ------------------------------------------------ round-7 mining guards

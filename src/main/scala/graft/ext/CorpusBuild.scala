@@ -115,7 +115,7 @@ object CorpusBuild {
     * deterministic rule). The cascade runs first with its own
     * exactly-once armor (a replay of this composite re-runs it
     * idempotently), then the verdict output + the two standing
-    * components ride [[IngestRecipe.applyBatchMergeFromOutputKeyed]]. */
+    * components ride [[IngestRecipe.applyBatchMergeFromOutput]]. */
   def ingestBatch(batch: DataFrame, embeddings: DataFrame,
       centroids: DataFrame, score: DataFrame => DataFrame,
       indexPath: String, outPath: String, batchId: Long,
@@ -145,7 +145,7 @@ object CorpusBuild {
           .as("lang"),
         when(col("stage") === "kept" && col("m4") === 1, col("toks"))
           .as("toks"))
-    IngestRecipe.applyBatchMergeFromOutputKeyed(batchId, outPath, OutSchema,
+    IngestRecipe.applyBatchMergeFromOutput(batchId, outPath, OutSchema,
       Seq(
         (s"$indexPath/survivors", SurvivorSchema, b.select(col("doc_id"))),
         (s"$indexPath/langledger", LangLedgerSchema,

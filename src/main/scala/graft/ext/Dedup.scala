@@ -367,7 +367,8 @@ object Dedup {
   }
 
   /** One micro-batch of the dedup-at-ingest stream
-    * ([[graft.streaming.StreamingOps.dedupIngestStream]]): PROBE the
+    * ([[graft.streaming.StreamingOps.ingestStream]] over this function):
+    * PROBE the
     * persisted banded index for the batch's near-dup pairs (append them to
     * `pairsOutPath`), then MERGE the batch's own signature and shingle rows
     * into the index — so batch N+1 dedups against base ∪ batches 1..N,
@@ -395,22 +396,23 @@ object Dedup {
     * the artifact) — no pre-seeding step required.
     *
     * The whole overwrite/anti-join/append armor is the shared
-    * [[IngestRecipe.applyBatch]] seam (one recipe, five ingest paths). */
+    * [[IngestRecipe.applyBatch]] seam (one recipe, two entry points,
+    * twelve ingest paths: see the [[IngestRecipe]] header). */
   def dedupIngestBatch(batch: DataFrame, indexPath: String,
       pairsOutPath: String, batchId: Long, threshold: Double = 0.7): Unit = {
     val b = batch.select("doc_id", "text").localCheckpoint()
     // shingle ONCE; the probe and the merge both consume these rows
     val sh = shingleRows(b).localCheckpoint()
-    IngestRecipe.applyBatch(b.select(col("doc_id")), batchId, pairsOutPath,
+    val keys = b.select(col("doc_id"))
+    IngestRecipe.applyBatch(batchId, pairsOutPath,
       Seq(
         IngestRecipe.IndexPart(s"$indexPath/banded", BandedSchema,
           bandedSignatures(sh)),
         IngestRecipe.IndexPart(s"$indexPath/shingles", ShingleSchema,
-          sh.distinct()))) {
+          sh.distinct())).map(_ -> keys)) {
       case Seq(baseBanded, baseShingles) =>
         minhashIncrementalPairs(baseBanded, b, baseShingles, threshold,
           deltaShingles = Some(sh))
-      case _ => throw new MatchError("two index parts expected")
     }
   }
 
@@ -781,8 +783,9 @@ object Dedup {
     val b = batch.select("doc_id", "text").localCheckpoint()
     // chunk ONCE; the screen and the index append both consume these rows
     val ch = chunkRows(b).localCheckpoint()
-    IngestRecipe.applyBatch(b.select(col("doc_id")), batchId, outPath,
-      Seq(IngestRecipe.IndexPart(s"$indexPath/chunks", ChunkSchema, ch))) {
+    IngestRecipe.applyBatch(batchId, outPath,
+      Seq(IngestRecipe.IndexPart(s"$indexPath/chunks", ChunkSchema, ch)
+        -> b.select(col("doc_id")))) {
       case Seq(base) =>
         // only index chunks that also occur in this batch can change a
         // batch doc's verdict: restrict BEFORE the frequency aggregate
@@ -793,7 +796,6 @@ object Dedup {
           .unionByName(ch.select("doc_id", "chunk"))
           .groupBy("chunk").agg(countDistinct("doc_id").as("nd"))
         boilerplateStats(ch, freq, minDocs)
-      case _ => throw new MatchError("one index part expected")
     }
   }
 
@@ -1001,11 +1003,10 @@ object Dedup {
       threshold: Double): Unit = {
     val assigned = Similarity.assignToCentroids(
       batch.select("vec_id", "embedding"), centroids).localCheckpoint()
-    IngestRecipe.applyBatch(assigned.select(col("vec_id")), batchId,
-      dropsOutPath,
+    IngestRecipe.applyBatch(batchId, dropsOutPath,
       Seq(IngestRecipe.IndexPart(indexPath, SemanticIndexSchema,
         assigned.select("vec_id", "embedding", "c_id"),
-        partitionBy = Seq("c_id")))) {
+        partitionBy = Seq("c_id")) -> assigned.select(col("vec_id")))) {
       case Seq(base) =>
         val scored = base
           .select(col("c_id"), col("vec_id").as("id_a"), col("embedding").as("emb_a"))
@@ -1015,7 +1016,6 @@ object Dedup {
           .withColumn("cos", round(VectorOps.cosine(col("emb_a"), col("emb_b")), 6))
           .filter(col("cos") >= threshold)
         semanticDropRule(scored)
-      case _ => throw new MatchError("one index part expected")
     }
   }
 
@@ -1093,7 +1093,7 @@ object Dedup {
     *
     * Per-batch output is the verdict frame (doc_id, stage) under
     * `batch_id=<id>` overwrite; the index merge derives from that output
-    * read-back ([[IngestRecipe.applyBatchMergeFromOutputKeyed]] — the
+    * read-back ([[IngestRecipe.applyBatchMergeFromOutput]] — the
     * semantic component keys on vec_id, the others on doc_id): the exact
     * index gains the batch's first-arrival fps, the LSH index gains ALL
     * stage-1 survivors (a doc later dropped at stage 2/3 still witnesses
@@ -1128,7 +1128,7 @@ object Dedup {
       centroids).localCheckpoint()
     val docKeys = b.select(col("doc_id"))
     val vecKeys = b.select(col("doc_id").as("vec_id"))
-    IngestRecipe.applyBatchMergeFromOutputKeyed(batchId, outPath,
+    IngestRecipe.applyBatchMergeFromOutput(batchId, outPath,
       CascadeOutSchema,
       Seq((s"$indexPath/exact", CascadeExactSchema, docKeys),
         (s"$indexPath/lsh/banded", BandedSchema, docKeys),
@@ -1205,7 +1205,6 @@ object Dedup {
               .when(col("m2") === 1, "2_minhash")
               .when(col("m3") === 1, "3_semantic")
               .otherwise("kept").as("stage"))
-      case _ => throw new MatchError("four index parts expected")
     } { outBack =>
       val surv1 = outBack.filter(col("stage") =!= "1_exact").select("doc_id")
       val surv2 = outBack.filter(col("stage").isin("3_semantic", "kept"))

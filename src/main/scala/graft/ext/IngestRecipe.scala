@@ -1,12 +1,20 @@
 package graft.ext
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** The ONE exactly-once recipe every standing-index ingest path follows
-  * ([[Dedup.dedupIngestBatch]], [[Dedup.boilerplateIngestBatch]],
-  * [[Dedup.semanticIngestBatch]], [[Dedup.cascadeIngestBatch]],
-  * [[SourceAudit.auditIngestBatch]]).
+/** The ONE exactly-once recipe every standing-index ingest path follows.
+  * [[applyBatch]] callers: [[Dedup.dedupIngestBatch]],
+  * [[Dedup.boilerplateIngestBatch]], [[Dedup.semanticIngestBatch]],
+  * [[Multimodal.phashIngestBatch]], [[Winnow.ingestBatch]],
+  * [[Monitor.cusumIngestBatch]], [[TextStats.bm25IngestBatch]].
+  * [[applyBatchMergeFromOutput]] callers: [[Dedup.cascadeIngestBatch]],
+  * [[Mining.capIngestBatch]], [[Trainer.sgdIngestBatch]],
+  * [[Trainer.hashedSgdIngestBatch]], [[CorpusBuild.ingestBatch]].
+  * ([[SourceAudit.auditIngestBatch]] keeps no index and uses only
+  * [[writeBatchOutput]].) Streams feed them through
+  * [[graft.streaming.StreamingOps.ingestStream]].
   * foreachBatch is at-least-once; per-batch OUTPUT becomes exactly-once
   * by partition overwrite, and the PROBE becomes replay-deterministic by
   * anti-joining the standing index against the batch's own keys:
@@ -44,42 +52,27 @@ object IngestRecipe {
   def writeBatchOutput(df: DataFrame, outPath: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
 
-  /** Run one micro-batch through the full recipe. `batchKeys` carries the
-    * batch's key column (its column NAMES are the anti-join keys — e.g. a
-    * one-column `doc_id` or `vec_id` frame); `probe` receives one
-    * pre-crash base per [[IndexPart]], in order, and its result is the
-    * batch's exactly-once output. */
-  def applyBatch(batchKeys: DataFrame, batchId: Long, outPath: String,
-      parts: Seq[IndexPart])(probe: Seq[DataFrame] => DataFrame): Unit = {
-    val bases = preCrashBases(batchKeys, parts.map(p => p.path -> p.schema))
-    writeBatchOutput(probe(bases), outPath, batchId)
-    appendParts(parts)
-  }
-
-  /** Step 1, shared: each standing component anti-joined against the
-    * batch's own keys — the pre-crash base a replay must probe. */
-  private def preCrashBases(batchKeys: DataFrame,
-      parts: Seq[(String, StructType)]): Seq[DataFrame] =
-    preCrashBasesKeyed(parts.map { case (p, s) => (p, s, batchKeys) })
-
-  /** [[applyBatch]] with PER-PART key frames, for recipes whose standing
-    * components key on different columns (the BM25 index: postings /
-    * doclens / positions anti-join on doc_id, the corpus-stats ledger on
-    * batch_id). Same three steps, same replay armor. */
-  def applyBatchKeyed(batchId: Long, outPath: String,
+  /** Run one micro-batch through the full recipe. Each [[IndexPart]]
+    * comes with its key frame: the batch's keys whose column NAMES are
+    * that component's anti-join keys (e.g. a one-column `doc_id` or
+    * `vec_id` frame). Components may key on different columns: the BM25
+    * index's postings / doclens / positions anti-join on doc_id, its
+    * corpus-stats ledger on batch_id. Paths with one key frame pass
+    * `parts.map(_ -> keys)`. `probe` receives one pre-crash base per
+    * part, in order, and its result is the batch's exactly-once output;
+    * the parts' `rows` are appended after it. */
+  def applyBatch(batchId: Long, outPath: String,
       parts: Seq[(IndexPart, DataFrame)])
       (probe: Seq[DataFrame] => DataFrame): Unit = {
-    val bases = preCrashBasesKeyed(
+    val bases = preCrashBases(
       parts.map { case (p, keys) => (p.path, p.schema, keys) })
     writeBatchOutput(probe(bases), outPath, batchId)
     appendParts(parts.map(_._1))
   }
 
-  /** Per-part key frames, for recipes whose components key on different
-    * columns (the cascade's exact/LSH parts key on doc_id, its semantic
-    * part on vec_id): each component anti-joins ITS OWN key frame's
-    * column names. */
-  private def preCrashBasesKeyed(
+  /** Step 1, shared: each standing component anti-joined against ITS OWN
+    * key frame's column names — the pre-crash base a replay must probe. */
+  private def preCrashBases(
       parts: Seq[(String, StructType, DataFrame)]): Seq[DataFrame] =
     parts.map { case (path, schema, keys) =>
       ParquetIO.readOrEmpty(keys.sparkSession, path, schema)
@@ -104,40 +97,44 @@ object IngestRecipe {
     * caller up front (Spark analyzes reads eagerly), and appending a
     * plan that re-reads the index path itself would self-read-while-
     * writing — this variant is the safe shape for output-derived merges.
-    * Replay behavior is unchanged: output overwrite is idempotent, the
-    * re-appended merge rows are identical duplicates consumers must
-    * distinct-collapse. */
-  def applyBatchMergeFromOutput(batchKeys: DataFrame, batchId: Long,
-      outPath: String, outSchema: StructType,
-      probeParts: Seq[(String, StructType)])
-      (probe: Seq[DataFrame] => DataFrame)
-      (merge: DataFrame => Seq[IndexPart]): Unit =
-    applyBatchMergeFromOutputKeyed(batchId, outPath, outSchema,
-      probeParts.map { case (p, s) => (p, s, batchKeys) })(probe)(merge)
-
-  /** [[applyBatchMergeFromOutput]] with PER-PART key frames, for recipes
-    * whose standing components key on different columns (the dedup
-    * cascade: exact + LSH components anti-join on doc_id, the semantic
-    * assignment component on vec_id). Same steps, same replay armor. */
-  def applyBatchMergeFromOutputKeyed(batchId: Long,
+    * `probeParts` are (path, schema, key frame) triples with the same
+    * per-part keys as [[applyBatch]] (the dedup cascade: exact + LSH
+    * components anti-join on doc_id, the semantic assignment component
+    * on vec_id). Replay behavior is unchanged: output overwrite is
+    * idempotent, the re-appended merge rows are identical duplicates
+    * consumers must distinct-collapse. It stays a separate entry point
+    * because only these paths pay for the output read-back. */
+  def applyBatchMergeFromOutput(batchId: Long,
       outPath: String, outSchema: StructType,
       probeParts: Seq[(String, StructType, DataFrame)])
       (probe: Seq[DataFrame] => DataFrame)
       (merge: DataFrame => Seq[IndexPart]): Unit = {
-    val bases = preCrashBasesKeyed(probeParts)
+    val bases = preCrashBases(probeParts)
     writeBatchOutput(probe(bases), outPath, batchId)
     val outBack = probeParts.head._3.sparkSession.read.schema(outSchema)
       .parquet(s"$outPath/batch_id=$batchId")
     appendParts(merge(outBack))
   }
 
-  /** Periodic compaction of a replay-duplicated standing index: full-row
-    * dropDuplicates, rewrite, atomic-ish swap. Consumers stay CORRECT
-    * without it (duplicate tolerance is their contract); compaction
-    * resets the monotonic size/probe-cost growth an at-least-once replay
-    * history leaves behind. Local/HDFS rename swaps the directory; an
+  /** Move a fully written `staged` directory over `target`: delete the
+    * target, then rename. A rename that returns false throws, and the
+    * staged data stays where it is: going on silently would leave no
+    * target, and the next writer would treat that as a cold start and
+    * drop every earlier row. Local/HDFS rename swaps the directory; an
     * object-store deployment would write a new snapshot path and flip a
     * manifest pointer instead — same two-phase shape. */
+  def swapIn(fs: FileSystem, staged: Path, target: Path): Unit = {
+    fs.delete(target, true)
+    if (!fs.rename(staged, target))
+      throw new java.io.IOException(
+        s"rename $staged -> $target failed; the staged data is still at $staged")
+  }
+
+  /** Periodic compaction of a replay-duplicated standing index: full-row
+    * dropDuplicates, rewrite, then [[swapIn]]. Consumers stay CORRECT
+    * without it (duplicate tolerance is their contract); compaction
+    * resets the monotonic size/probe-cost growth an at-least-once replay
+    * history leaves behind. */
   def compact(spark: SparkSession, path: String, schema: StructType,
       partitionBy: Seq[String] = Nil): Unit = {
     val tmp = path.stripSuffix("/") + "__compact"
@@ -146,12 +143,7 @@ object IngestRecipe {
       .write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    fs.delete(dst, true)
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"compact: rename $tmp -> $path failed")
+    val dst = new Path(path)
+    swapIn(dst.getFileSystem(spark.sessionState.newHadoopConf()), new Path(tmp), dst)
   }
 }

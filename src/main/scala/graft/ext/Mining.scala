@@ -372,9 +372,8 @@ object Mining {
   def capIngestBatch(batch: DataFrame, ledgerPath: String, keptOutPath: String,
       batchId: Long, cap: Int = 20): Unit = {
     val rows = batch.select("event_id", "user_id", "ts", "event_type", "value")
-    IngestRecipe.applyBatchMergeFromOutput(
-      rows.select("event_id"), batchId, keptOutPath, CapKeptSchema,
-      Seq(ledgerPath -> CapLedgerSchema)) {
+    IngestRecipe.applyBatchMergeFromOutput(batchId, keptOutPath, CapKeptSchema,
+      Seq((ledgerPath, CapLedgerSchema, rows.select("event_id")))) {
       case Seq(base) =>
         val nBase = base.groupBy("user_id")
           .agg(countDistinct(col("event_id")).as("n_base"))

@@ -110,9 +110,9 @@ object Monitor {
       .join(baselineMu, Seq("event_type"), "left_anti").count()
     require(missing == 0,
       s"cusumIngestBatch: $missing event type(s) in the batch have no baseline μ")
-    IngestRecipe.applyBatch(
-      facts.select("event_type", "d"), batchId, outPath,
-      Seq(IngestRecipe.IndexPart(ledgerPath, ledgerSchema, facts))) {
+    IngestRecipe.applyBatch(batchId, outPath,
+      Seq(IngestRecipe.IndexPart(ledgerPath, ledgerSchema, facts)
+        -> facts.select("event_type", "d"))) {
       case Seq(base) =>
         // base is already anti-joined on the batch's keys; full-row dedup
         // over base ∪ facts absorbs replay duplicates AND bit-identical

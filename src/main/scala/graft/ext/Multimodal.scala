@@ -142,10 +142,10 @@ object Multimodal {
     import batch.sparkSession.implicits._
     val h = phashTable(mediaTable(batch.select("doc_id", "text")).as[MediaRow])
       .localCheckpoint()
-    IngestRecipe.applyBatch(h.select(col("doc_id")), batchId, pairsOutPath,
-      Seq(IngestRecipe.IndexPart(s"$indexPath/hashes", PhashSchema, h))) {
+    IngestRecipe.applyBatch(batchId, pairsOutPath,
+      Seq(IngestRecipe.IndexPart(s"$indexPath/hashes", PhashSchema, h)
+        -> h.select(col("doc_id")))) {
       case Seq(base) => Dedup.bandedHammingPairsDelta(base, h, "phash", maxHamming)
-      case _ => throw new MatchError("one index part expected")
     }
   }
 

@@ -386,7 +386,8 @@ object TextStats {
 
   /** One micro-batch of inverted-index maintenance on the shared
     * [[IngestRecipe.applyBatch]] seam (the same exactly-once armor as the
-    * dedup/semantic/winnow families): append the batch's postings and
+    * dedup/semantic/winnow families; the stats ledger anti-joins on
+    * batch_id, the other three components on doc_id): append the batch's postings and
     * positional postings into their term-bucket partitions and its
     * doclens, O(delta) files; the
     * per-batch output is the vocabulary-growth audit (docs × new-terms vs
@@ -410,7 +411,7 @@ object TextStats {
       .select(lit(batchId).as("batch_id"), col("n_docs"), col("sum_dl"))
     val docKeys = b.select(col("doc_id"))
     val batchKey = b.sparkSession.range(1).select(lit(batchId).as("batch_id"))
-    IngestRecipe.applyBatchKeyed(batchId, outPath,
+    IngestRecipe.applyBatch(batchId, outPath,
       Seq(
         IngestRecipe.IndexPart(s"$indexPath/postings", PostingSchema, post,
           partitionBy = Seq("tb")) -> docKeys,
@@ -430,7 +431,6 @@ object TextStats {
           .select(col("doc_id"), col("dl"),
             coalesce(col("n_terms"), lit(0L)).as("n_terms"),
             coalesce(col("n_new_terms"), lit(0L)).as("n_new_terms"))
-      case _ => throw new MatchError("four index parts expected")
     }
   }
 

@@ -296,9 +296,8 @@ object Trainer {
       batchId: Long): Unit = {
     val spark = feats.sparkSession
     val keys = spark.range(1).select(lit(batchId).as("batch_id"))
-    IngestRecipe.applyBatchMergeFromOutput(
-      keys, batchId, outPath, OutSchema,
-      Seq(ledgerPath -> LedgerSchema)) {
+    IngestRecipe.applyBatchMergeFromOutput(batchId, outPath, OutSchema,
+      Seq((ledgerPath, LedgerSchema, keys))) {
       case Seq(base) =>
         // step from the weights AS OF batch_id-1, never "latest": a
         // sequential trainer's input state is defined by batch ORDER, so
@@ -381,9 +380,8 @@ object Trainer {
       ledgerPath: String, outPath: String, batchId: Long): Unit = {
     val spark = feats.sparkSession
     val keys = spark.range(1).select(lit(batchId).as("batch_id"))
-    IngestRecipe.applyBatchMergeFromOutput(
-      keys, batchId, outPath, HashedOutSchema,
-      Seq(ledgerPath -> HashedLedgerSchema)) {
+    IngestRecipe.applyBatchMergeFromOutput(batchId, outPath, HashedOutSchema,
+      Seq((ledgerPath, HashedLedgerSchema, keys))) {
       case Seq(base) =>
         hashedStep(hashedDocs(feats),
           latestHashedWeights(base.filter(col("batch_id") < batchId)), stats)

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * same key, so the exchange is reused, and when the compacted update set
   * is dim-sized Catalyst/AQE broadcasts it. At production scale the final
   * write lands via an ACID table format's MERGE (Iceberg/Delta); the
-  * parquet-rewrite used by the streaming test harness
-  * ([[graft.streaming.StreamingOps.upsertStream]]) is the offline
+  * parquet-rewrite of the streaming twin
+  * ([[graft.streaming.StreamingOps.applyUpsertBatch]], driven by
+  * [[graft.streaming.StreamingOps.upsertStream]]) is the offline
   * stand-in with identical merge semantics.
   */
 object Upsert {

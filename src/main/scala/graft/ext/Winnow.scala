@@ -166,9 +166,9 @@ object Winnow {
     // pairsFrom's distinct does in the inline/full run
     val batchFps = fingerprints(batch, k, w).select("doc_id", "fh")
       .distinct().localCheckpoint()
-    IngestRecipe.applyBatch(
-      batch.select("doc_id"), batchId, pairsOutPath,
-      Seq(IngestRecipe.IndexPart(indexPath, IndexSchema, batchFps))) {
+    IngestRecipe.applyBatch(batchId, pairsOutPath,
+      Seq(IngestRecipe.IndexPart(indexPath, IndexSchema, batchFps)
+        -> batch.select("doc_id"))) {
       case Seq(base0) =>
         val base = base0.distinct() // replay-duplicate tolerance
         // postings restricted to hashes the batch actually carries —

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming twins of the batch event operators
@@ -194,35 +194,54 @@ object StreamingOps {
         round(sum("value"), 2).as("total_value"))
       .select("user_id", "n_events", "duration_s", "total_value")
 
+  /** The one ingest sink: `df` feeds `batchFn` one micro-batch at a time
+    * through foreachBatch in update mode. Every standing-index ingest path
+    * is `ingestStream(docs)(Family.xIngestBatch(_, …, _))`. The REAL
+    * foreachBatch batch id is passed on because it keys the exactly-once
+    * `batch_id=<id>` output ([[graft.ext.IngestRecipe.writeBatchOutput]]):
+    * foreachBatch is at-least-once, and a replayed batch keeps its id, so
+    * it rewrites its own directory instead of appending a second copy. The
+    * batch functions' artifacts are the durable state, not Spark's state
+    * store, so the serving side reads them without blocking on the stream.
+    * An exception thrown by `batchFn` stops the query, and the
+    * `StreamingQueryException` carries it as its cause. */
+  def ingestStream(df: DataFrame)(batchFn: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    df.writeStream.outputMode("update").foreachBatch(batchFn)
+
+  /** Inverted-index maintenance at ingest: [[ingestStream]] over
+    * [[graft.ext.TextStats.bm25IngestBatch]]. Kept as a named entry point
+    * because the benchmark's `ingest_serve` workload calls it. */
+  def bm25IngestStream(docs: DataFrame, indexPath: String, outPath: String)
+      : DataStreamWriter[Row] =
+    ingestStream(docs)(graft.ext.TextStats.bm25IngestBatch(_, indexPath, outPath, _))
+
   /** Streaming CDC apply — the streaming twin of
     * [[graft.ext.Upsert.merge]]: each micro-batch is LWW-compacted
     * ([[graft.ext.Upsert.latestPerKey]] on `(ts, event_id)` DESC) and
     * merged into the parquet table at `targetDir`, so the target always
     * holds exactly one row per user: that user's latest event so far.
+    * This wrapper owns the `ts → ts_us` key projection that
+    * [[applyUpsertBatch]] orders on.
     *
     * foreachBatch is the standard streaming-merge sink: per batch ONE
     * key-shuffle over (existing ∪ compacted-batch). At production scale
     * the merge target is an ACID table format (MERGE INTO) so the rewrite
     * touches only matched files; plain-parquet overwrite is the offline
     * stand-in with identical merge semantics (see Upsert scaladoc). */
-  def upsertStream(updates: DataFrame, targetDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val keyed = updates.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-      col("event_id"), col("value"))
-    keyed.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyUpsertBatch(batch, targetDir)
-      }
-  }
+  def upsertStream(updates: DataFrame, targetDir: String): DataStreamWriter[Row] =
+    ingestStream(updates.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+      col("event_id"), col("value")))((batch, _) => applyUpsertBatch(batch, targetDir))
 
   /** One micro-batch of the streaming upsert: compact the batch, union
     * with the current target, keep the latest row per key, then swap the
     * new table in. The merged result is FULLY written to a scratch path
-    * first and only then moved over the target (delete + rename), so a
-    * crash mid-write leaves the current table intact — the remaining
-    * exposure is the metadata swap itself, which an ACID table format's
-    * MERGE closes completely in production (Upsert scaladoc). */
+    * first and only then moved over the target
+    * ([[graft.ext.IngestRecipe.swapIn]]: delete + rename, and a failed
+    * rename throws), so a crash mid-write leaves the current table intact
+    * — the remaining exposure is the metadata swap itself, which an ACID
+    * table format's MERGE closes completely in production (Upsert
+    * scaladoc). */
   def applyUpsertBatch(batch: DataFrame, targetDir: String): Unit = {
     val ord = Seq(col("ts_us").desc, col("event_id").desc)
     val compacted = graft.ext.Upsert.latestPerKey(batch, Seq("user_id"), ord)
@@ -238,9 +257,7 @@ object StreamingOps {
       } else compacted
     val scratch = new org.apache.hadoop.fs.Path(targetDir + "__staging")
     merged.write.mode("overwrite").parquet(scratch.toString)
-    fs.delete(target, true)
-    fs.rename(scratch, target)
-    ()
+    graft.ext.IngestRecipe.swapIn(fs, scratch, target)
   }
 
   // ------------------------------------------------ stateful sessionize
@@ -309,172 +326,6 @@ object StreamingOps {
           }
       }.toDF()
   }
-
-  /** Streaming maintenance of the cluster-partitioned IVF index: each
-    * micro-batch of new/updated vectors merges into ONLY its touched
-    * buckets ([[graft.ext.Similarity.indexUpsertBatch]] — dynamic
-    * partition overwrite). The centroid table is frozen by the caller:
-    * the quantizer must not drift across batches. */
-  def indexUpsertStream(vectors: DataFrame, centroids: DataFrame,
-      indexPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.Similarity.indexUpsertBatch(batch, centroids, indexPath)
-      }
-
-  /** Streaming twin of the incremental near-dup dedup (`dedup_incremental`):
-    * each micro-batch of documents probes the PERSISTED banded MinHash
-    * index for near-dup pairs (appended to `pairsOutPath`), then merges
-    * its own signatures into the index — the dedup-at-ingest loop a
-    * 100 TB pipeline runs continuously. Mirrors [[indexUpsertStream]]:
-    * the index artifact is the durable state, not Spark's state store, so
-    * the stream restarts cheaply and batch backfills interleave with it.
-    * Per-batch semantics in [[graft.ext.Dedup.dedupIngestBatch]]. */
-  def dedupIngestStream(docs: DataFrame, indexPath: String,
-      pairsOutPath: String, threshold: Double = 0.7)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the REAL foreachBatch batchId keys the pairs output directory —
-        // a replayed batch rewrites batch_id=<id> instead of re-appending
-        graft.ext.Dedup.dedupIngestBatch(batch, indexPath, pairsOutPath,
-          batchId, threshold)
-      }
-
-  /** Perceptual-hash near-dup at ingest — foreachBatch wiring for
-    * [[graft.ext.Multimodal.phashIngestBatch]]: each media micro-batch is
-    * hashed once, probed O(delta) against the standing hash index
-    * (pairs land under `batch_id=<id>` with overwrite — replay-
-    * idempotent), and its hashes merge into the index. The asset-decode
-    * cost is paid exactly once per payload, at ingest. */
-  def phashIngestStream(docs: DataFrame, indexPath: String,
-      pairsOutPath: String, maxHamming: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Multimodal.phashIngestBatch(batch, indexPath,
-          pairsOutPath, batchId, maxHamming)
-      }
-
-  /** Semantic dedup at ingest — foreachBatch wiring for
-    * [[graft.ext.Dedup.semanticIngestBatch]]: each embedding micro-batch
-    * is probed against the standing cluster-partitioned assignment index
-    * (frozen centroids — the incremental-quantizer contract), its drops
-    * land under `batch_id=<id>` with overwrite (replay-idempotent), and
-    * its assigned rows merge into the index's bucket footprint. */
-  def semanticIngestStream(vectors: DataFrame, centroids: DataFrame,
-      indexPath: String, dropsOutPath: String, threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Dedup.semanticIngestBatch(batch, centroids, indexPath,
-          dropsOutPath, batchId, threshold)
-      }
-
-  /** Winnow (MOSS) near-dup screening at ingest — foreachBatch wiring for
-    * [[graft.ext.Winnow.ingestBatch]]: each document micro-batch is
-    * fingerprinted once (per-doc narrow work), probed O(delta·postings)
-    * against the standing fingerprint index, its batch-touching pairs
-    * land under `batch_id=<id>` with overwrite (replay-idempotent), and
-    * its fingerprints merge into the index. */
-  def winnowIngestStream(docs: DataFrame, indexPath: String,
-      pairsOutPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Winnow.ingestBatch(batch, indexPath, pairsOutPath, batchId)
-      }
-
-  /** Inverted-index maintenance at ingest — foreachBatch wiring for
-    * [[graft.ext.TextStats.bm25IngestBatch]]: each document micro-batch
-    * is tokenized once, its postings / doclens / positional postings /
-    * corpus-stats ledger row merge into the standing lexical artifact
-    * (O(delta) files in the term-bucket footprint), and the
-    * vocabulary-growth audit lands under
-    * `batch_id=<id>` with overwrite (replay-idempotent). The serving
-    * side ([[graft.ext.TextStats.bm25FromIndex]] /
-    * [[graft.ext.TextStats.phraseFromIndex]]) reads the artifact, not
-    * Spark state, so queries never block on the stream. */
-  def bm25IngestStream(docs: DataFrame, indexPath: String, outPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.TextStats.bm25IngestBatch(batch, indexPath, outPath, batchId)
-      }
-
-  /** End-to-end corpus-build maintenance at ingest — foreachBatch wiring
-    * for [[graft.ext.CorpusBuild.ingestBatch]]: each (doc_id, text, lang)
-    * micro-batch probes the standing cascade, is scored by the frozen
-    * filter, lands its verdict frame exactly-once, and grows the
-    * survivors + lang-ledger components O(delta); the publish-time
-    * [[graft.ext.CorpusBuild.readout]] reads the artifacts, never Spark
-    * state. `embeddings`/`centroids`/`score` are the frozen context a
-    * deployment fixes at stream start (the cascade-centroid freeze,
-    * extended to the trained filter). */
-  def corpusBuildIngestStream(docs: DataFrame,
-      embeddings: DataFrame, centroids: DataFrame,
-      score: DataFrame => DataFrame, indexPath: String, outPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.CorpusBuild.ingestBatch(batch, embeddings, centroids,
-          score, indexPath, outPath, batchId)
-      }
-
-  /** Per-user contribution capping at ingest — foreachBatch wiring for
-    * [[graft.ext.Mining.capIngestBatch]]: each event micro-batch keeps
-    * only the rows within each user's standing quota (first-arrived
-    * `cap`, ts then event_id within a batch), lands them exactly-once
-    * under `batch_id=<id>`, and merges the kept ids into the
-    * cap-bounded ledger. */
-  def capIngestStream(events: DataFrame, ledgerPath: String,
-      keptOutPath: String, cap: Int = 20)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Mining.capIngestBatch(batch, ledgerPath, keptOutPath,
-          batchId, cap)
-      }
-
-  /** Drift monitoring at ingest — foreachBatch wiring for
-    * [[graft.ext.Monitor.cusumIngestBatch]]: each micro-batch of
-    * FINALIZED daily counts (the upstream append-mode watermarked 1-day
-    * window emits a day once its watermark passes) folds into the
-    * standing day-fact ledger, its CUSUM alarm rows land under
-    * `batch_id=<id>` with overwrite (replay-idempotent), and
-    * `Monitor.snapshot` serves the full alarm history at any point.
-    * μ is the frozen `baselineMu` — the prospective-monitoring contract. */
-  def cusumStream(daily: DataFrame, baselineMu: DataFrame,
-      ledgerPath: String, outPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    daily.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Monitor.cusumIngestBatch(batch, baselineMu,
-          ledgerPath, outPath, batchId)
-      }
-
-  /** Incremental per-source corpus audit at ingest — foreachBatch wiring
-    * for [[graft.ext.SourceAudit]]: each micro-batch lands its narrow
-    * fact rows under `batch_id=<id>` (overwrite → replay-idempotent; the
-    * REAL foreachBatch batchId keys the directory), and
-    * `SourceAudit.snapshot` serves the audit table at any point. */
-  def sourceAuditStream(docs: DataFrame, statePath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.SourceAudit.auditIngestBatch(batch, statePath, batchId)
-      }
 
   final case class Change(key: Long, attr: String, ts_us: Long, tie: Long)
   final case class Scd2Open(attr: String, from_us: Long, from_tie: Long, version: Int)

@@ -316,7 +316,7 @@ class CompactionMatrixSpec extends SparkSpec {
     Seq(torn, clean).foreach(cbIngest(_, 0L))
     // TORN WINDOW: batch 1's cascade seam completes (cascade components +
     // cascout landed, with its own exactly-once armor), but the process
-    // dies before the composite's applyBatchMergeFromOutputKeyed writes
+    // dies before the composite's applyBatchMergeFromOutput writes
     // verdicts / survivors / langledger — the one window the whole-batch
     // matrix never opens. Exactly what CorpusBuild.ingestBatch runs first:
     Dedup.cascadeIngestBatch(cbBatch(1L).select("doc_id", "text"),
@@ -360,7 +360,7 @@ class CompactionMatrixSpec extends SparkSpec {
     def ingest(r: String, id: Long): Unit =
       TextStats.bm25IngestBatch(docBatch(id), s"$r/idx", s"$r/out", id)
     Seq(torn, clean).foreach(ingest(_, 0L))
-    // TORN WINDOW: applyBatchKeyed writes the batch output first, then
+    // TORN WINDOW: applyBatch writes the batch output first, then
     // appends postings → doclens → positions → stats in order. Simulate a
     // death after the postings append: snapshot the last three components,
     // run batch 1 fully, restore the snapshots — output + postings carry
@@ -488,5 +488,23 @@ class CompactionMatrixSpec extends SparkSpec {
         .orderBy("q_id", "vec_id").collect().map(_.toString).toSeq
     assert(serveI(tornI) == serveI(cleanI),
       "rebuilt IVF artifact served differently than a never-torn build")
+  }
+
+  test("swapIn: a rename that returns false throws and keeps the staged data") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    val fs = new RawLocalFileSystem {
+      override def rename(src: Path, dst: Path): Boolean = false
+    }
+    fs.initialize(java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+    val root = java.nio.file.Files.createTempDirectory("graft_swap").toString
+    val staged = s"$root/t__staging"
+    val target = s"$root/t"
+    Seq(1L, 2L, 3L).toDF("user_id").write.parquet(staged)
+    Seq(9L).toDF("user_id").write.parquet(target)
+    val e = intercept[java.io.IOException](
+      IngestRecipe.swapIn(fs, new Path(staged), new Path(target)))
+    assert(e.getMessage.contains(staged), e.getMessage)
+    assert(spark.read.parquet(staged).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L),
+      "a failed swap must leave the staged data readable")
   }
 }

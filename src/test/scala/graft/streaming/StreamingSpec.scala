@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ext.Sessionize
+import graft.ext.{Dedup, Mining, Monitor, Multimodal, Sessionize, SourceAudit}
 import graft.queries.Registry.events
 
 /** Structured Streaming twins vs their batch counterparts, driven through
@@ -501,7 +501,8 @@ class StreamingSpec extends SparkSpec {
       .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
       .select("vec_id", "embedding")
-    val q = StreamingOps.indexUpsertStream(stream, centroids, incPath)
+    val q = StreamingOps.ingestStream(stream)(
+        (b, _) => Similarity.indexUpsertBatch(b, centroids, incPath))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -510,6 +511,43 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(content(incPath) == content(fullPath),
       "incrementally maintained index diverged from the from-scratch build")
+  }
+
+  test("ingestStream: real batch ids 0, 1, 2; a throwing batch stops the query with its cause") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    val root = java.nio.file.Files.createTempDirectory("graft_ingest_stream")
+    val stage = java.nio.file.Files.createDirectory(root.resolve("stage"))
+    val t0 = System.currentTimeMillis()
+    Seq(0L, 1L, 2L).foreach { i =>
+      val tmp = root.resolve(s"tmp$i").toString
+      spark.range(i * 10, i * 10 + 10).toDF("doc_id").coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = stage.resolve(s"f$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst)
+      assert(dst.toFile.setLastModified(t0 - (2 - i) * 60000))
+    }
+    def stream = spark.readStream.schema("doc_id LONG")
+      .option("maxFilesPerTrigger", "1").parquet(stage.toString)
+    // (batch id, first doc_id of the batch): one file per batch, in order
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val q = StreamingOps.ingestStream(stream) { (b, id) =>
+      seen.add(id -> b.agg(min("doc_id")).head().getLong(0)); ()
+    }.trigger(Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
+    finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq == Seq(0L -> 0L, 1L -> 10L, 2L -> 20L))
+
+    val boom = new IllegalStateException("batch 1 rejected")
+    val failing = StreamingOps.ingestStream(stream) { (_, id) =>
+      if (id == 1L) throw boom
+    }.trigger(Trigger.AvailableNow()).start()
+    val e = intercept[StreamingQueryException] {
+      try failing.awaitTermination(300000) finally failing.stop()
+    }
+    assert(e.getCause eq boom, s"cause was ${e.getCause}")
   }
 
   test("dedup ingest stream: per-batch index probe+merge == sequential batch fold") {
@@ -555,7 +593,8 @@ class StreamingSpec extends SparkSpec {
     val incPairs = root.resolve("inc_pairs").toString
     val stream = spark.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.dedupIngestStream(stream, incIdx, incPairs)
+    val q = StreamingOps.ingestStream(stream)(
+        Dedup.dedupIngestBatch(_, incIdx, incPairs, _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -616,7 +655,8 @@ class StreamingSpec extends SparkSpec {
     val incDrops = root.resolve("inc_drops").toString
     val stream = spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.semanticIngestStream(stream, centroids, incIdx, incDrops, tau)
+    val q = StreamingOps.ingestStream(stream)(
+        Dedup.semanticIngestBatch(_, centroids, incIdx, incDrops, _, tau))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -665,7 +705,8 @@ class StreamingSpec extends SparkSpec {
     val incPairs = root.resolve("inc_pairs").toString
     val stream = spark.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.phashIngestStream(stream, incIdx, incPairs)
+    val q = StreamingOps.ingestStream(stream)(
+        Multimodal.phashIngestBatch(_, incIdx, incPairs, _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -716,7 +757,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.sourceAuditStream(stream, state)
+    val q = StreamingOps.ingestStream(stream)(
+        SourceAudit.auditIngestBatch(_, state, _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -1196,7 +1238,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema("event_type STRING, d DATE, c LONG")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.cusumStream(stream, mu, ledger, out)
+    val q = StreamingOps.ingestStream(stream)(
+        Monitor.cusumIngestBatch(_, mu, ledger, out, _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -1236,7 +1279,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema("event_id LONG, user_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.capIngestStream(stream, ledger, out, cap = 5)
+    val q = StreamingOps.ingestStream(stream)(
+        Mining.capIngestBatch(_, ledger, out, _, cap = 5))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()
@@ -1356,8 +1400,8 @@ class StreamingSpec extends SparkSpec {
       (root.resolve("inc_idx").toString, root.resolve("inc_out").toString)
     val stream = spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
       .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-    val q = StreamingOps.corpusBuildIngestStream(stream, emb, cents, score,
-        incIdx, incOut)
+    val q = StreamingOps.ingestStream(stream)(
+        CorpusBuild.ingestBatch(_, emb, cents, score, incIdx, incOut, _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
     finally q.stop()

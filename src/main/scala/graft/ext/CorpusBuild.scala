@@ -165,13 +165,14 @@ object CorpusBuild {
     }
   }
 
-  /** Replay repair for the composite's own components (the cascade's
-    * four repair via [[Dedup.compactCascadeIndex]]). */
-  def compactIndex(spark: SparkSession, indexPath: String): Unit = {
-    Dedup.compactCascadeIndex(spark, s"$indexPath/cascade")
-    IngestRecipe.compact(spark, s"$indexPath/survivors", SurvivorSchema)
-    IngestRecipe.compact(spark, s"$indexPath/langledger", LangLedgerSchema)
-  }
+  /** Replay repair for the composite's own components and the inner
+    * cascade's four ([[Dedup.compactCascadeIndex]]'s set): all six
+    * rewrites run at once ([[IngestRecipe.compactAll]]). */
+  def compactIndex(spark: SparkSession, indexPath: String): Unit =
+    IngestRecipe.compactAll(spark,
+      Dedup.cascadeIndexComponents(s"$indexPath/cascade") ++ Seq(
+        (s"$indexPath/survivors", SurvivorSchema, Nil),
+        (s"$indexPath/langledger", LangLedgerSchema, Nil)))
 
   // ----------------------------------------------------------- readout
 

@@ -1036,10 +1036,15 @@ object Dedup {
     * (doc_id, s), so full-row dropDuplicates removes exactly the replay
     * appends. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Unit = {
-    IngestRecipe.compact(spark, s"$indexPath/banded", BandedSchema)
-    IngestRecipe.compact(spark, s"$indexPath/shingles", ShingleSchema)
-  }
+      indexPath: String): Unit =
+    IngestRecipe.compactAll(spark, dedupIndexComponents(indexPath))
+
+  /** [[dedupIngestBatch]]'s two standing components, as
+    * [[IngestRecipe.compactAll]] entries. */
+  private def dedupIndexComponents(indexPath: String)
+      : Seq[(String, org.apache.spark.sql.types.StructType, Seq[String])] = Seq(
+    (s"$indexPath/banded", BandedSchema, Nil),
+    (s"$indexPath/shingles", ShingleSchema, Nil))
 
   /** Same repair for [[boilerplateIngestBatch]]'s standing chunk index. */
   def compactChunkIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1229,14 +1234,19 @@ object Dedup {
 
   /** Replay-duplicate repair for the cascade's four standing components
     * (legitimate rows are unique per key family — see each schema's doc —
-    * so full-row dropDuplicates removes exactly the replay appends). */
+    * so full-row dropDuplicates removes exactly the replay appends); the
+    * four rewrites run at once ([[IngestRecipe.compactAll]]). */
   def compactCascadeIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Unit = {
-    IngestRecipe.compact(spark, s"$indexPath/exact", CascadeExactSchema)
-    compactDedupIndex(spark, s"$indexPath/lsh")
-    IngestRecipe.compact(spark, s"$indexPath/sem", SemanticIndexSchema,
-      partitionBy = Seq("c_id"))
-  }
+      indexPath: String): Unit =
+    IngestRecipe.compactAll(spark, cascadeIndexComponents(indexPath))
+
+  /** The cascade's four standing components, as
+    * [[IngestRecipe.compactAll]] entries. */
+  private[graft] def cascadeIndexComponents(indexPath: String)
+      : Seq[(String, org.apache.spark.sql.types.StructType, Seq[String])] =
+    (s"$indexPath/exact", CascadeExactSchema, Nil) +:
+      dedupIndexComponents(s"$indexPath/lsh") :+
+      ((s"$indexPath/sem", SemanticIndexSchema, Seq("c_id")))
 
   def embeddingNearDup(embeddings: DataFrame, threshold: Double): DataFrame = {
     // norms precomputed once per vector (not per pair); pair scoring is one

@@ -165,7 +165,7 @@ object HybridSearch {
     // single-query and batched serves); terms outside a query's own list
     // never reach its sum (the qt join restricts rows first) and the
     // union-order chain contributes an exact 0.0 for them
-    val lexScored = TextStats.bm25ScoredTerms(tf, stats)
+    val lexScored = TextStats.bm25ScoredTerms(tf, stats.attach)
       .join(broadcast(qt), Seq("term"))
       .filter(col("doc_id") =!= col("q_id"))
       .groupBy("q_id", "doc_id")

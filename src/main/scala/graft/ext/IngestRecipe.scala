@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The ONE exactly-once recipe every standing-index ingest path follows.
@@ -27,7 +28,16 @@ import org.apache.spark.sql.types.StructType
   *      batch's own `batch_id=<id>` directory with mode OVERWRITE, so a
   *      replayed batch rewrites the same files instead of re-appending;
   *   3. append the batch's rows to each index component (O(delta) files;
-  *      partitioned components land only in their bucket footprint).
+  *      partitioned components are clustered on their partition columns
+  *      first, so each touched bucket gains one file per commit). The
+  *      parts are independent, so their appends run at once, one thread
+  *      each, and step 3 returns only when every part has finished.
+  *
+  * Step 2 always precedes step 3. Within step 3 the parts land in no set
+  * order, so a crash can leave ANY subset of the parts appended — not
+  * only a prefix of their list. Each part's own anti-join in step 1
+  * covers every such subset: a replay probes each component's pre-crash
+  * base whether or not that component's append landed.
   *
   * Step 3 stays append, so a replay can leave DUPLICATE rows in a
   * standing index — every consumer must be duplicate-tolerant
@@ -60,7 +70,7 @@ object IngestRecipe {
     * corpus-stats ledger on batch_id. Paths with one key frame pass
     * `parts.map(_ -> keys)`. `probe` receives one pre-crash base per
     * part, in order, and its result is the batch's exactly-once output;
-    * the parts' `rows` are appended after it. */
+    * the parts' `rows` are appended after it, all parts at once. */
   def applyBatch(batchId: Long, outPath: String,
       parts: Seq[(IndexPart, DataFrame)])
       (probe: Seq[DataFrame] => DataFrame): Unit = {
@@ -80,12 +90,60 @@ object IngestRecipe {
     }
 
   /** Step 3, shared: O(delta) append of the batch's rows to each index
-    * component (partitioned components land only in their footprint). */
+    * component, all parts at once ([[runAll]]); partitioned components
+    * are [[clustered]] so they land only in their footprint, one file per
+    * touched bucket. */
   private def appendParts(parts: Seq[IndexPart]): Unit =
-    parts.foreach { p =>
-      val w = p.rows.write.mode("append")
+    runAll(parts.map { p => () =>
+      val w = clustered(p.rows, p.partitionBy).write.mode("append")
       (if (p.partitionBy.nonEmpty) w.partitionBy(p.partitionBy: _*) else w)
         .parquet(p.path)
+    })
+
+  /** `df` hash-partitioned on `cols` into the session's default
+    * parallelism (unchanged when `cols` is empty): a `partitionBy` write
+    * of the result puts each partition value in exactly one task, so it
+    * gains one file per value, and the tasks spread over every core. The
+    * partition count is explicit, so adaptive execution keeps it. An
+    * aggregate grouped by a superset of `cols` reuses this exchange. */
+  def clustered(df: DataFrame, cols: Seq[String]): DataFrame =
+    if (cols.isEmpty) df
+    else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      cols.map(col): _*)
+
+  /** Run `tasks` at once, one fresh thread each, and return when all have
+    * finished. Fresh threads, not a pool: a thread copies its parent's
+    * Spark local properties when it is created, so every job a task
+    * starts carries the caller's job group, streaming query and batch
+    * ids, and any tracing key. A failure never cuts the others short:
+    * the first failed task's exception (in task order) is rethrown after
+    * all of them have finished, the later ones suppressed onto it. */
+  private def runAll(tasks: Seq[() => Unit]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
+    else {
+      val failures = new Array[Throwable](tasks.size)
+      val threads = tasks.zipWithIndex.map { case (task, i) =>
+        val t = new Thread(() =>
+          try task() catch { case e: Throwable => failures(i) = e },
+          s"ingest-recipe-part-$i")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      try threads.foreach(_.join())
+      catch { case e: InterruptedException =>
+        // the caller is being stopped: stop the parts too, and still
+        // leave no thread behind
+        threads.foreach(_.interrupt())
+        threads.foreach(_.join())
+        throw e
+      }
+      failures.filter(_ != null) match {
+        case Array() =>
+        case Array(first, rest @ _*) =>
+          rest.foreach(first.addSuppressed)
+          throw first
+      }
     }
 
   /** [[applyBatch]] variant for paths whose index merge is a PROJECTION
@@ -134,11 +192,14 @@ object IngestRecipe {
     * dropDuplicates, rewrite, then [[swapIn]]. Consumers stay CORRECT
     * without it (duplicate tolerance is their contract); compaction
     * resets the monotonic size/probe-cost growth an at-least-once replay
-    * history leaves behind. */
+    * history leaves behind. A partitioned component is [[clustered]] on
+    * its partition columns before the dedup — the one exchange serves
+    * both, since full-row duplicates share their partition values — so
+    * it comes back as one file per partition value. */
   def compact(spark: SparkSession, path: String, schema: StructType,
       partitionBy: Seq[String] = Nil): Unit = {
     val tmp = path.stripSuffix("/") + "__compact"
-    val w = ParquetIO.readOrEmpty(spark, path, schema)
+    val w = clustered(ParquetIO.readOrEmpty(spark, path, schema), partitionBy)
       .dropDuplicates()
       .write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
@@ -146,4 +207,14 @@ object IngestRecipe {
     val dst = new Path(path)
     swapIn(dst.getFileSystem(spark.sessionState.newHadoopConf()), new Path(tmp), dst)
   }
+
+  /** [[compact]] every component of one standing index at once: the
+    * components are independent directories, so their rewrites run
+    * concurrently ([[runAll]]). Each entry is (path, schema, partition
+    * columns). */
+  def compactAll(spark: SparkSession,
+      components: Seq[(String, StructType, Seq[String])]): Unit =
+    runAll(components.map { case (path, schema, parts) =>
+      () => compact(spark, path, schema, parts)
+    })
 }

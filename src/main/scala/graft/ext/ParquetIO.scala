@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -28,11 +29,19 @@ object ParquetIO {
   }
 
   /** Read `path` with the given schema, or an empty DataFrame of that
-    * schema when the path does not exist yet (cold start). */
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    try spark.read.schema(schema).parquet(path)
-    catch { case e: AnalysisException if isMissingPath(e) =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
+    * schema when the path does not exist yet (cold start). Existence is
+    * checked through the Hadoop FileSystem first: handing a missing path
+    * to `spark.read` makes Spark log a full stack trace at error level
+    * before it fails, which buries real errors under an expected cold
+    * start. A present-but-empty directory still reads as no rows. */
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val p = new Path(path)
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) empty
+    else
+      try spark.read.schema(schema).parquet(path)
+      catch { case e: AnalysisException if isMissingPath(e) => empty }
+  }
 
   /** The inferred batch schema of `path`, or None when the path is
     * missing or holds no footers to sniff — the driver-side, footer-only

@@ -171,7 +171,8 @@ object TextStats {
     * Document frequencies are a window count over the term-keyed tf rows
     * ([[bm25ScoredTerms]]), which counts each doc once because doc_ids
     * are unique in `docs`; the corpus-level (N, avgdl) is a 1-row
-    * aggregate joined by broadcast.
+    * aggregate joined by broadcast (the index-served form inlines the
+    * same two values as literals instead, [[corpusStatsFromLedger]]).
     *
     * Determinism: the per-term partial scores are summed in the FIXED
     * order of `terms` (an explicit coalesce chain, not a float `sum()`
@@ -193,18 +194,19 @@ object TextStats {
       .filter(col("term").isin(terms: _*))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-    bm25Rank(tf, stats, terms, topN)
+    bm25Rank(tf, _.crossJoin(broadcast(stats)), terms, topN)
   }
 
   /** The shared scoring tail of [[bm25]] and [[bm25FromIndex]] — ONE
     * expression tree, so the index-served path is bit-identical to the
     * corpus-direct path by construction, not by parallel maintenance.
     * `tf` carries (doc_id, dl, term, tf) for the query terms only, one
-    * row per (term, doc_id); `stats` is the 1-row (n_docs, avgdl) frame. */
+    * row per (term, doc_id); `withStats` adds (n_docs, avgdl) to it
+    * ([[bm25ScoredTerms]]). */
   private def bm25Rank(tf: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame, terms: Seq[String],
-      topN: Int): org.apache.spark.sql.DataFrame =
-    bm25ScoredTerms(tf, stats).groupBy("doc_id")
+      withStats: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      terms: Seq[String], topN: Int): org.apache.spark.sql.DataFrame =
+    bm25ScoredTerms(tf, withStats).groupBy("doc_id")
       .agg(bm25PinnedSum(terms).as("score"))
       .select(col("doc_id"), round(col("score"), 6).as("bm25"))
       .orderBy(desc("bm25"), col("doc_id"))
@@ -216,8 +218,12 @@ object TextStats {
     * forms) and [[HybridSearch.hybridRrfBatchFromIndex]] (the batched
     * serve) — so the two Spark forms cannot drift on the formula or its
     * constants. `tf` carries (term, doc_id, tf, dl) with ONE row per
-    * (term, doc_id); `stats` is the 1-row (n_docs, avgdl) frame, joined
-    * by broadcast.
+    * (term, doc_id); `withStats` adds the corpus-level `n_docs` and
+    * `avgdl` columns to it: the corpus-direct [[bm25]] cross-joins its
+    * 1-row aggregate by broadcast, the index serves add the ledger's
+    * values as literals ([[CorpusStats.attach]]) and so skip the
+    * broadcast job. The values, and so the scores, are the same either
+    * way.
     *
     * Because rows are unique per (term, doc_id), the document frequency
     * is `count(1) over (partition by term)` — no count(distinct) Expand,
@@ -230,10 +236,10 @@ object TextStats {
     * the gram-partitioned window PlanShapeSpec bans for
     * text_ngram_dupspans. */
   private[graft] def bm25ScoredTerms(tf: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    tf.withColumn("dfreq",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("term")))
-      .crossJoin(broadcast(stats))
+      withStats: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    withStats(tf.withColumn("dfreq",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("term"))))
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("dfreq") + lit(0.5)) / (col("dfreq") + lit(0.5))))
       .withColumn("sc",
@@ -360,40 +366,65 @@ object TextStats {
   private def toksOf(text: Column): Column =
     filter(split(lower(text), "[^a-z]+"), t => length(t) > 0)
 
+  /** (doc_id, toks): the one tokenization every index component is
+    * derived from. */
+  private def tokenized(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.select(col("doc_id"), toksOf(col("text")).as("toks"))
+
   /** A batch's posting rows: (tb, term, doc_id, tf, dl). Token-less docs
     * produce NO posting rows (explode drops empty arrays) — they live in
     * the doclens component only, mirroring [[bm25]] where they feed
-    * (n_docs, avgdl) but never score. */
+    * (n_docs, avgdl) but never score. The rows are hash-partitioned on
+    * `tb` BEFORE the per-(term, doc) count, so one exchange serves both
+    * the aggregate and the bucket layout the append writes. */
   def postingRows(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), toksOf(col("text")).as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .select(termBucket(col("term")).as("tb"), col("term"), col("doc_id"),
-        col("tf"), col("dl"))
+    postingsOf(tokenized(docs))
+
+  private def postingsOf(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    IngestRecipe.clustered(
+        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+            explode(col("toks")).as("term"))
+          .select(termBucket(col("term")).as("tb"), col("term"), col("doc_id"), col("dl")),
+        Seq("tb"))
+      .groupBy("tb", "term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+      .select(col("tb"), col("term"), col("doc_id"), col("tf"), col("dl"))
 
   /** A batch's doclen rows: (doc_id, dl) for EVERY doc. */
   def docLenRows(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), size(toksOf(col("text"))).cast("long").as("dl"))
+    docLensOf(tokenized(docs))
+
+  private def docLensOf(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
 
   /** A batch's positional posting rows: (tb, term, doc_id, pos) per token
     * OCCURRENCE, pos 0-based over the [a-z]+ token stream — the same
     * tokenizer as [[postingRows]], one analyzer per index family. */
   def positionRows(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), posexplode(toksOf(col("text"))).as(Seq("pos", "term")))
+    positionsOf(tokenized(docs))
+
+  private def positionsOf(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    toks.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
       .select(termBucket(col("term")).as("tb"), col("term"), col("doc_id"),
         col("pos"))
 
   /** One micro-batch of inverted-index maintenance on the shared
     * [[IngestRecipe.applyBatch]] seam (the same exactly-once armor as the
     * dedup/semantic/winnow families; the stats ledger anti-joins on
-    * batch_id, the other three components on doc_id): append the batch's postings and
-    * positional postings into their term-bucket partitions and its
-    * doclens, O(delta) files; the
-    * per-batch output is the vocabulary-growth audit (docs × new-terms vs
-    * the PRE-CRASH base — replay-stable by the recipe's anti-join). The
-    * base-vocab probe is a 1-column distinct over the postings index —
-    * O(vocabulary), not O(corpus), and prunable to the batch's buckets.
+    * batch_id, the other three components on doc_id): append the batch's
+    * postings and positional postings into their term-bucket partitions
+    * (one file per touched bucket), its doclens and its stats-ledger row,
+    * O(delta) files; the per-batch output is the vocabulary-growth audit
+    * (docs × new-terms vs the PRE-CRASH base — replay-stable by the
+    * recipe's anti-join). The base-vocab probe is a 1-column distinct
+    * over the postings index — O(vocabulary), not O(corpus), and
+    * prunable to the batch's buckets.
+    *
+    * The batch is tokenized ONCE: one `localCheckpoint` of
+    * (doc_id, toks), and postings, doclens, positions and the probe are
+    * all derived from it. The ledger row's (n_docs, sum_dl) is observed
+    * on that same checkpoint job (`Dataset.observe`), so the row is a
+    * local 1-row frame and costs no aggregate job.
+    *
     * Contract shared with every ingest family: doc_ids are unique across
     * clean batches (upstream's job); replays are absorbed by the armor.
     * The stats-ledger component additionally DEPENDS on that uniqueness
@@ -402,15 +433,21 @@ object TextStats {
     * where a doclens scan would collapse it. */
   def bm25IngestBatch(batch: org.apache.spark.sql.DataFrame, indexPath: String,
       outPath: String, batchId: Long): Unit = {
-    val b = batch.select("doc_id", "text").localCheckpoint()
-    // tokenize ONCE; the probe and the merge both consume these rows
-    val post = postingRows(b).localCheckpoint()
-    val dlr = docLenRows(b).localCheckpoint()
-    val statsRow = dlr.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("dl"), lit(0L)).as("sum_dl"))
-      .select(lit(batchId).as("batch_id"), col("n_docs"), col("sum_dl"))
-    val docKeys = b.select(col("doc_id"))
-    val batchKey = b.sparkSession.range(1).select(lit(batchId).as("batch_id"))
+    val spark = batch.sparkSession
+    val sizes = new org.apache.spark.sql.Observation()
+    val toks = tokenized(batch)
+      .observe(sizes, count(lit(1)).as("n_docs"),
+        coalesce(sum(size(col("toks"))).cast("long"), lit(0L)).as("sum_dl"))
+      .localCheckpoint()
+    val sized = sizes.get
+    val statsRow = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(batchId,
+        sized("n_docs").asInstanceOf[Long], sized("sum_dl").asInstanceOf[Long])),
+      Bm25StatsSchema)
+    val post = postingsOf(toks)
+    val dlr = docLensOf(toks)
+    val docKeys = toks.select(col("doc_id"))
+    val batchKey = spark.range(1).select(lit(batchId).as("batch_id"))
     IngestRecipe.applyBatch(batchId, outPath,
       Seq(
         IngestRecipe.IndexPart(s"$indexPath/postings", PostingSchema, post,
@@ -418,7 +455,7 @@ object TextStats {
         IngestRecipe.IndexPart(s"$indexPath/doclens", DocLenSchema, dlr)
           -> docKeys,
         IngestRecipe.IndexPart(s"$indexPath/positions", PositionSchema,
-          positionRows(b), partitionBy = Seq("tb")) -> docKeys,
+          positionsOf(toks), partitionBy = Seq("tb")) -> docKeys,
         IngestRecipe.IndexPart(s"$indexPath/stats", Bm25StatsSchema, statsRow)
           -> batchKey)) {
       case Seq(basePostings, _, _, _) =>
@@ -461,16 +498,29 @@ object TextStats {
       .orderBy("doc_id")
   }
 
-  /** The 1-row (n_docs, avgdl) frame from the corpus-stats ledger
-    * component, computed on the DRIVER: the ledger's O(batches) rows are
-    * collected (one small job, no exchange), replay duplicates dropped
-    * full-row, and Σsum_dl / Σn_docs taken as one double division —
-    * bit-identical to `avg(dl)` over doclens (exact integer sums below
-    * 2⁵³ — [[Bm25StatsSchema]]). An empty ledger yields (0, NULL),
-    * exactly what count/avg give on an empty doclens scan, so cold start
-    * is unchanged. The frame is a local relation, so it SNAPSHOTS the
-    * ledger at call time: batches committed after this call are not seen
-    * by plans built on the returned frame.
+  /** The corpus-level BM25 statistics, held on the driver. `avgdl` is
+    * None for an empty corpus — what `avg(dl)` gives on an empty scan. */
+  final case class CorpusStats(nDocs: Long, avgdl: Option[Double]) {
+    /** `df` with `n_docs` and `avgdl` added as literal columns — the
+      * `withStats` of [[bm25ScoredTerms]] for the index serves. Literals
+      * need no join, so the serve runs no broadcast job. */
+    def attach(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.withColumn("n_docs", lit(nDocs))
+        .withColumn("avgdl", avgdl.fold(lit(null).cast("double"))(lit(_)))
+  }
+
+  /** (n_docs, avgdl) from the corpus-stats ledger component, computed on
+    * the DRIVER: the ledger's O(batches) rows are collected (one small
+    * job, no exchange), replay duplicates dropped full-row, and
+    * Σsum_dl / Σn_docs taken as one double division — bit-identical to
+    * `avg(dl)` over doclens (exact integer sums below 2⁵³ —
+    * [[Bm25StatsSchema]]). An empty ledger yields (0, None), exactly what
+    * count/avg give on an empty doclens scan, so cold start is unchanged.
+    * The result is a driver value, so it SNAPSHOTS the ledger at call
+    * time: batches committed after this call are not seen by plans built
+    * with it. Its callers, [[bm25FromIndex]] and
+    * [[HybridSearch.hybridRrfBatchFromIndex]], inline the two values into
+    * the shared scoring tree as literals ([[CorpusStats.attach]]).
     *
     * PRECONDITION (the snapshot ≡ doclens equivalence): doc_ids are
     * unique ACROSS clean batches — [[bm25IngestBatch]]'s standing ingest
@@ -482,21 +532,11 @@ object TextStats {
     * doclens-derived values, and compaction cannot repair it (the two
     * ledger rows differ by batch_id). Upstream dedup owns that
     * invariant, exactly as it owns it for every other ingest family. */
-  def corpusStatsFromLedger(
-      statsLedger: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def corpusStatsFromLedger(statsLedger: org.apache.spark.sql.DataFrame): CorpusStats = {
     val ledger = statsLedger.select("batch_id", "n_docs", "sum_dl").collect().distinct
     val nDocs = ledger.map(_.getLong(1)).sum
     val sumDl = ledger.map(_.getLong(2)).sum
-    val avgdl = if (nDocs == 0L) null else java.lang.Double.valueOf(sumDl.toDouble / nDocs.toDouble)
-    statsLedger.sparkSession.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(nDocs, avgdl)), CorpusStatsSchema)
-  }
-
-  /** Schema of the 1-row corpus-stats frame ([[corpusStatsFromLedger]]). */
-  private val CorpusStatsSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("n_docs", LongType, nullable = false),
-      StructField("avgdl", DoubleType)))
+    CorpusStats(nDocs, if (nDocs == 0L) None else Some(sumDl.toDouble / nDocs.toDouble))
   }
 
   /** Proximity (slop) phrase search from the same positional component —
@@ -593,12 +633,14 @@ object TextStats {
     * O(postings of the query terms) + O(applied batches), independent of
     * corpus size. Plan: pruned scan → one exchange on term → replay
     * dedup → dfreq window → score → one exchange on doc_id → TakeOrdered;
-    * with the ledger read, five Spark jobs a query. */
+    * (n_docs, avgdl) enter as literals, so there is no broadcast job:
+    * with the ledger read, four Spark jobs a query. */
   def bm25FromIndex(postings: org.apache.spark.sql.DataFrame,
       statsLedger: org.apache.spark.sql.DataFrame, terms: Seq[String],
       topN: Int): org.apache.spark.sql.DataFrame = {
     require(terms.nonEmpty, "empty query")
-    bm25Rank(postingsTf(postings, terms), corpusStatsFromLedger(statsLedger), terms, topN)
+    bm25Rank(postingsTf(postings, terms), corpusStatsFromLedger(statsLedger).attach,
+      terms, topN)
   }
 
   /** The (term, doc_id, tf, dl) rows of `terms` from the postings
@@ -621,12 +663,13 @@ object TextStats {
     * four components (clean state is full-row unique — postings key on
     * (term, doc_id), doclens on doc_id, positions on (term, doc_id, pos),
     * the stats ledger on batch_id), the bucketed components rewritten
-    * into their layout. */
+    * into their layout; the four rewrites run at once
+    * ([[IngestRecipe.compactAll]]). */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Unit =
-    bm25Components(indexPath).foreach { case (_, path, schema, parts) =>
-      IngestRecipe.compact(spark, path, schema, partitionBy = parts)
-    }
+    IngestRecipe.compactAll(spark, bm25Components(indexPath).map {
+      case (_, path, schema, parts) => (path, schema, parts)
+    })
 
   /** The four components of the standing BM25 artifact —
     * (name, path, schema, partition columns), ONE definition consumed by
@@ -692,11 +735,9 @@ object TextStats {
     val verdicts = compactPolicy(spark, indexPath, threshold).localCheckpoint()
     val toCompact = verdicts.filter(col("verdict") === "compact")
       .select("component").collect().map(_.getString(0)).toSet
-    bm25Components(indexPath)
-      .filter { case (name, _, _, _) => toCompact(name) }
-      .foreach { case (_, path, schema, parts) =>
-        IngestRecipe.compact(spark, path, schema, partitionBy = parts)
-      }
+    IngestRecipe.compactAll(spark, bm25Components(indexPath).collect {
+      case (name, path, schema, parts) if toCompact(name) => (path, schema, parts)
+    })
     verdicts
   }
 }

@@ -41,8 +41,10 @@ object ScaleQueries {
 
   /** Replay-INFLATED inverted index per sf-dir — the `compact_policy`
     * fixture: two clean ingest batches, then a TORN replay of batch 1
-    * that died between the doclens and positions appends of
-    * [[TextStats.bm25IngestBatch]]'s four-part write (the duplicates are
+    * whose postings and doclens appends landed and whose positions and
+    * stats appends did not — one of the subsets
+    * [[TextStats.bm25IngestBatch]]'s concurrent four-part write can leave
+    * behind (the duplicates are
     * built by the SAME row builders, so they are bit-identical — exactly
     * what an at-least-once re-delivery leaves). postings and doclens end
     * 1.5× inflated, positions and stats clean. */

@@ -361,8 +361,9 @@ class CompactionMatrixSpec extends SparkSpec {
       TextStats.bm25IngestBatch(docBatch(id), s"$r/idx", s"$r/out", id)
     Seq(torn, clean).foreach(ingest(_, 0L))
     // TORN WINDOW: applyBatch writes the batch output first, then
-    // appends postings → doclens → positions → stats in order. Simulate a
-    // death after the postings append: snapshot the last three components,
+    // appends postings, doclens, positions and stats concurrently, so a
+    // death can leave any subset of them landed. This one: postings
+    // landed, the others did not. Snapshot the last three components,
     // run batch 1 fully, restore the snapshots — output + postings carry
     // batch 1, doclens/positions/stats do not.
     Seq("doclens", "positions", "stats").foreach(c =>
@@ -380,8 +381,8 @@ class CompactionMatrixSpec extends SparkSpec {
         Seq("t", "a", "g", "u"), topN = 10)) ++
       rows(TextStats.phraseFromIndex(
         readP(s"$r/idx/positions", TextStats.PositionSchema), Seq("t", "a"))) ++
-      rows(TextStats.corpusStatsFromLedger(
-        readP(s"$r/idx/stats", TextStats.Bm25StatsSchema)))
+      Seq(TextStats.corpusStatsFromLedger(
+        readP(s"$r/idx/stats", TextStats.Bm25StatsSchema)).toString)
     assert(served(torn) == served(clean),
       "torn four-part append drifted the served BM25/phrase/stats")
     Seq(0L, 1L).foreach { id =>
@@ -404,6 +405,53 @@ class CompactionMatrixSpec extends SparkSpec {
     }
   }
 
+  test("bm25: crash INSIDE the concurrent append (positions and stats landed, postings and doclens did not), then replay") {
+    def root(n: String) =
+      java.nio.file.Files.createTempDirectory(s"graft_torn_$n").toString
+    val torn = root("bmc")
+    val clean = root("bmd")
+    def ingest(r: String, id: Long): Unit =
+      TextStats.bm25IngestBatch(docBatch(id), s"$r/idx", s"$r/out", id)
+    Seq(torn, clean).foreach(ingest(_, 0L))
+    // TORN WINDOW only a concurrent step 3 can leave: the later parts
+    // landed while the earlier ones did not — not a prefix of the part
+    // order. Snapshot postings and doclens, run batch 1 fully, restore
+    // them: output + positions + stats carry batch 1, postings and
+    // doclens do not.
+    Seq("postings", "doclens").foreach(c =>
+      copyDir(s"$torn/idx/$c", s"$torn/snap_$c"))
+    ingest(torn, 1L)
+    Seq("postings", "doclens").foreach(c =>
+      copyDir(s"$torn/snap_$c", s"$torn/idx/$c"))
+    // redelivery replays the whole batch
+    ingest(torn, 1L)
+    ingest(clean, 1L)
+    def served(r: String): Seq[String] =
+      rows(TextStats.bm25FromIndex(
+        readP(s"$r/idx/postings", TextStats.PostingSchema),
+        readP(s"$r/idx/stats", TextStats.Bm25StatsSchema),
+        Seq("t", "a", "g", "u"), topN = 10)) ++
+      rows(TextStats.phraseFromIndex(
+        readP(s"$r/idx/positions", TextStats.PositionSchema), Seq("t", "a"))) ++
+      Seq(TextStats.corpusStatsFromLedger(
+        readP(s"$r/idx/stats", TextStats.Bm25StatsSchema)).toString)
+    assert(served(torn) == served(clean),
+      "torn concurrent append drifted the served BM25/phrase/stats")
+    Seq(0L, 1L).foreach { id =>
+      assert(rows(spark.read.schema(TextStats.Bm25OutSchema)
+          .parquet(s"$torn/out/batch_id=$id")) ==
+        rows(spark.read.schema(TextStats.Bm25OutSchema)
+          .parquet(s"$clean/out/batch_id=$id")),
+        s"torn concurrent append drifted batch $id's output partition")
+    }
+    Seq(torn, clean).foreach(r => TextStats.compactBm25Index(spark, s"$r/idx"))
+    TextStats.bm25Components("").foreach { case (c, _, sch, _) =>
+      assert(rows(readP(s"$torn/idx/$c", sch)) ==
+        rows(readP(s"$clean/idx/$c", sch)),
+        s"component $c differs from the never-interrupted fold after repair")
+    }
+  }
+
   test("compact_policy: policy-then-compact ≡ unconditional compact; second run all-skip") {
     def root(n: String) =
       java.nio.file.Files.createTempDirectory(s"graft_cpol_$n").toString
@@ -412,8 +460,9 @@ class CompactionMatrixSpec extends SparkSpec {
     def build(r: String): Unit = {
       TextStats.bm25IngestBatch(docBatch(0L), s"$r/idx", s"$r/out", 0L)
       TextStats.bm25IngestBatch(docBatch(1L), s"$r/idx", s"$r/out", 1L)
-      // torn replay: re-delivery of batch 1 died between the doclens and
-      // positions appends — postings/doclens duplicated, the rest clean
+      // torn replay: re-delivery of batch 1 landed its postings and
+      // doclens appends but not positions or stats — postings/doclens
+      // duplicated, the rest clean
       TextStats.postingRows(docBatch(1L)).write.mode("append")
         .partitionBy("tb").parquet(s"$r/idx/postings")
       TextStats.docLenRows(docBatch(1L)).write.mode("append")
@@ -506,5 +555,45 @@ class CompactionMatrixSpec extends SparkSpec {
     assert(e.getMessage.contains(staged), e.getMessage)
     assert(spark.read.parquet(staged).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L),
       "a failed swap must leave the staged data readable")
+  }
+
+  test("applyBatch: a failing part is rethrown only after the other parts finish; no part thread outlives the call") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_partfail").toString
+    // the slow part: four one-row tasks that each sleep before writing
+    val nap = udf { (id: Long) => Thread.sleep(1500); id }
+    val slow = spark.range(0, 4, 1, 4)
+      .select(nap(col("id")).as("doc_id"), lit(1L).as("dl"))
+    // the failing part: its one task throws at once
+    def failing(marker: String) = {
+      val boom = udf { (id: Long) =>
+        if (id >= 0) throw new IllegalStateException(marker); id }
+      spark.range(1).select(boom(col("id")).as("doc_id"), lit(1L).as("dl"))
+    }
+    def mentions(e: Throwable, marker: String): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains(marker))
+    val keys = Seq(-1L).toDF("doc_id")
+    def apply(parts: (String, DataFrame)*): Throwable = intercept[Throwable] {
+      IngestRecipe.applyBatch(0L, s"$root/out", parts.map { case (name, rows) =>
+        IngestRecipe.IndexPart(s"$root/$name", TextStats.DocLenSchema, rows) -> keys
+      })(_ => Seq(1L).toDF("doc_id"))
+    }
+    val e = apply("slow" -> slow, "failing" -> failing("part-fail-marker"))
+    // looked at first thing, before anything else gives the slow part time
+    val slowCommitted = new java.io.File(s"$root/slow/_SUCCESS").exists()
+    assert(slowCommitted, "the failure was rethrown before the other part finished")
+    assert(mentions(e, "part-fail-marker"), s"not the failing part's exception: $e")
+    assert(readP(s"$root/slow", TextStats.DocLenSchema).count() == 4L)
+    assert(readP(s"$root/failing", TextStats.DocLenSchema).count() == 0L)
+    val alive = scala.jdk.CollectionConverters.SetHasAsScala(
+        Thread.getAllStackTraces.keySet).asScala
+      .filter(t => t.getName.startsWith("ingest-recipe-part-") && t.isAlive)
+    assert(alive.isEmpty, s"part threads left running: $alive")
+    // two failures: the first part's is thrown, the second's suppressed on it
+    val two = apply("fail-a" -> failing("marker-a"), "fail-b" -> failing("marker-b"))
+    assert(mentions(two, "marker-a") && !mentions(two, "marker-b"), s"$two")
+    assert(two.getSuppressed.exists(mentions(_, "marker-b")),
+      s"the second failure is not suppressed on the first: ${two.getSuppressed.toSeq}")
   }
 }

@@ -341,7 +341,7 @@ class MiningSpec extends SparkSpec {
     // a planted EXACT duplicate has identical shingles → identical
     // signatures → collides in every band at every setting
     val d = sh.select("doc_id").filter(col("doc_id") % 20 === 0 && col("doc_id") < 1000000)
-      .agg(min("doc_id")).head.getLong(0)
+      .agg(min("doc_id")).head().getLong(0)
     settings.foreach { b =>
       assert(cands(b).contains((d, d + 1000000L)),
         s"planted exact dup ($d, ${d + 1000000L}) missing at $b bands")

@@ -1358,6 +1358,64 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("bm25 ingest stream: every job of a batch carries the query's id and job group") {
+    import spark.implicits._
+    import graft.ext.TextStats
+    val root = java.nio.file.Files.createTempDirectory("graft_bm25_props")
+    val stage = java.nio.file.Files.createDirectory(root.resolve("stage"))
+    // two staged files, one per micro-batch
+    Seq(Seq((1L, "alpha beta gamma"), (2L, "beta delta")),
+      Seq((3L, "gamma gamma epsilon"), (4L, "")))
+      .zipWithIndex.foreach { case (docs, i) =>
+        val tmp = root.resolve(s"tmp$i").toString
+        docs.toDF("doc_id", "text").coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath, stage.resolve(s"b$i.parquet"))
+      }
+    // every job start's (query id, job group); the part appends run on
+    // threads of their own, so a lost local property shows here
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val flushGroup = s"bm25-props-flush-${System.nanoTime()}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).orNull
+        if (prop("spark.jobGroup.id") == flushGroup) flushed.countDown()
+        else { seen.add((prop("sql.streaming.queryId"), prop("spark.jobGroup.id"))); () }
+      }
+    }
+    val stream = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", "1").parquet(stage.toString)
+    spark.sparkContext.addSparkListener(l)
+    val q = try {
+      val q = StreamingOps.bm25IngestStream(stream,
+          root.resolve("idx").toString, root.resolve("out").toString)
+        .option("checkpointLocation", root.resolve("chk").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try assert(q.awaitTermination(300000), "stream did not finish in 5 min")
+      finally q.stop()
+      spark.sparkContext.setJobGroup(flushGroup, "flush")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+      q
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+    val jobs = scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+    // two batches, each at least a checkpoint, an output write and four
+    // part appends
+    assert(jobs.size >= 12, s"too few jobs seen: ${jobs.size}")
+    val stray = jobs.filterNot(_ == ((q.id.toString, q.runId.toString)))
+    assert(stray.isEmpty,
+      s"${stray.size} of ${jobs.size} jobs lack the query's id or job group: ${stray.distinct}")
+    assert(TextStats.corpusStatsFromLedger(spark.read.schema(TextStats.Bm25StatsSchema)
+      .parquet(root.resolve("idx/stats").toString)) == TextStats.CorpusStats(4L, Some(2.0)))
+  }
+
   test("corpus-build ingest stream: verdicts + readout == sequential batch fold") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -25,6 +25,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Transform.transform(RawSource.syntheticRaw(spark, "/root/testdata/sf0.001"))
 
+  /** The local session every entry point and spec runs on: `cores` task
+    * slots and as many shuffle partitions, UTC session time, no UI. The
+    * nanosAsLong guard reads legacy TIMESTAMP(NANOS) event files as longs
+    * (readers sniff and normalize; a no-op for µs files); it is set at
+    * build so no query mutates session conf at plan time. */
+  def localSession(cores: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (k, q) => k -> q.fn }

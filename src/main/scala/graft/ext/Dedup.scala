@@ -427,7 +427,11 @@ object Dedup {
     * codegen while a CodegenFallback expression also drops the
     * surrounding stage out of codegen, and the exchange it removed
     * carries only one 64-int partial row per doc per task. Keep this
-    * form; don't "narrow" it again without beating that number.)
+    * form; don't "narrow" it again without beating that number. The
+    * graft.functions kernels now all compile into the surrounding stage
+    * (one row function called from eval and generated code), so the
+    * stage-drop half of that reason no longer holds for a new kernel;
+    * the A/B above has not been re-run with that shape.)
     * Output: (doc_id, sh). */
   def simhashes(docsWithText: DataFrame): DataFrame = {
     val hashed = docsWithText

@@ -88,8 +88,9 @@ object Similarity {
     * Distance via the dot identity ‖v−c‖² = ‖v‖² + ‖c‖² − 2v·c with the
     * squared norms precomputed ONCE per side before the broadcast cross —
     * one codegen [[VectorOps.dot]] per (vector, centroid) pair. The HOF
-    * subtraction form ([[VectorOps.l2]]) is CodegenFallback and would run
-    * interpreted n×k times — the known per-pair scale trap. */
+    * subtraction form (`aggregate(zip_with(...))`, VectorDotSpec's
+    * reference) is CodegenFallback and would run interpreted n×k times —
+    * the known per-pair scale trap. */
   def assignClustersL2(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
     val e = embeddings.withColumn("v_nsq", VectorOps.normSq(col("embedding")))
     val c = centroids.withColumn("c_nsq", VectorOps.normSq(col("c_emb")))

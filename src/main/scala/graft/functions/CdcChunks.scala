@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,8 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * ascii)` + `filter(sequence(4, len), …)` + two more HOF passes — four
   * interpreted HigherOrderFunction evaluations PER CHARACTER of the
   * corpus (the known interpreted-HOF scale trap; guide §4.1). Here the
-  * whole boundary scan + digest is one compiled JVM pass per row;
-  * CodegenFallback costs one interpreted dispatch per ROW, not per char.
+  * whole boundary scan + digest is one JVM pass per row in
+  * [[CdcChunks.chunks]], which both the interpreted path and the
+  * generated code call, so the enclosing operator stays in whole-stage
+  * codegen.
   *
   * Character semantics match the SQL chain: positions and lengths count
   * CODE POINTS (Spark's `length`/`substr`/`split(text,'')` are
@@ -33,22 +34,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * never overflow (the old int chain would have raised under ANSI at
   * ~0x11000·29791 ≈ 2³³ — no corpus text reaches that, and the
   * admissibility spec pins equality on multi-byte inputs). */
-case class CdcChunks(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+case class CdcChunks(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("h", StringType, nullable = false),
     StructField("clen", IntegerType, nullable = false))), containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"CdcChunks needs string, got $t")
-  }
+  override def nullSafeEval(input: Any): Any = CdcChunks.chunks(input.asInstanceOf[UTF8String])
 
-  private val hexDigits = "0123456789abcdef".toCharArray
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.CdcChunks.chunks($c)")
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override protected def withNewChildInternal(newChild: Expression): CdcChunks =
+    copy(child = newChild)
+}
+
+object CdcChunks {
+
+  /** Row kernel (also the codegen target). */
+  def chunks(text: UTF8String): ArrayData = {
+    val s = text.toString
     // code points + each code point's char offset (for substring slicing)
     val nChars = s.length
     val cps = new Array[Int](nChars + 1) // at most nChars code points
@@ -80,27 +87,14 @@ case class CdcChunks(child: Expression)
     var st = 1 // 1-based code-point start of the current chunk
     while (j < ends.size) {
       val en = ends.get(j)
-      val clen = en - st + 1
       // chunk text = code points [st, en]; char slice via the offsets
       val bytes = s.substring(charOff(st - 1), charOff(en))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      md.reset()
-      val d = md.digest(bytes)
-      val cs = new Array[Char](32)
-      var b = 0
-      while (b < 16) {
-        cs(2 * b) = hexDigits((d(b) >> 4) & 0xf)
-        cs(2 * b + 1) = hexDigits(d(b) & 0xf)
-        b += 1
-      }
       out(j) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(new String(cs)), clen)): InternalRow
+        Md5Hex.utf8(md.digest(bytes)), en - st + 1)): InternalRow
       st = en + 1
       j += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunks =
-    copy(child = newChild)
 }

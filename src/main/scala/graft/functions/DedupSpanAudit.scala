@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The per-document tail of the substring-dedup rewrite
   * ([[graft.queries.CurationQueries.dedupSpansRewrite]]) in ONE compiled
@@ -17,37 +16,43 @@ import org.apache.spark.unsafe.types.UTF8String
   * Replaces a six-HOF interpreted chain per doc (interval-merge
   * `aggregate`, two `transform`s, `zip_with`+`sequence`+`flatten` gap
   * enumeration, then an `element_at` transform feeding the digest) with
-  * an O(len + |starts|) two-pointer sweep in compiled JVM code: sort the
+  * an O(len + |starts|) two-pointer sweep in compiled JVM code
+  * ([[DedupSpanAudit.audit]], called from eval and generated code): sort the
   * starts, carry a covered-until watermark, stream kept tokens straight
   * into the md5. Position-for-position identical to the gap enumeration
   * (both emit exactly the uncovered indices in ascending order) — pinned
   * in ScaleOpsSpec against an independent per-token scalar reference
   * over overlap/adjacent/saturated/identity shapes. */
 case class DedupSpanAudit(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes {
   require(n >= 1, s"gram width n=$n must be >= 1")
+
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(StringType), ArrayType(IntegerType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_removed", IntegerType, nullable = false),
     StructField("clean_fp", StringType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"DedupSpanAudit needs (array<string>, array<int>), got $l / $r")
-    }
+  override def nullSafeEval(toks: Any, starts: Any): Any =
+    DedupSpanAudit.audit(toks.asInstanceOf[ArrayData], starts.asInstanceOf[ArrayData], n)
 
-  private val hexDigits = "0123456789abcdef".toCharArray
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, s) => s"graft.functions.DedupSpanAudit.audit($t, $s, $n)")
 
-  override def nullSafeEval(toks: Any, startsIn: Any): Any = {
-    val t = toks.asInstanceOf[ArrayData]
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DedupSpanAudit =
+    copy(left = newLeft, right = newRight)
+}
+
+object DedupSpanAudit {
+
+  /** Row kernel (also the codegen target). */
+  def audit(t: ArrayData, startsIn: ArrayData, n: Int): InternalRow = {
     val len = t.numElements()
-    val sa = startsIn.asInstanceOf[ArrayData]
-    val starts = new Array[Int](sa.numElements())
+    val starts = new Array[Int](startsIn.numElements())
     var i = 0
-    while (i < starts.length) { starts(i) = sa.getInt(i); i += 1 }
+    while (i < starts.length) { starts(i) = startsIn.getInt(i); i += 1 }
     java.util.Arrays.sort(starts)
     val md = java.security.MessageDigest.getInstance("MD5")
     var removed = 0
@@ -69,18 +74,6 @@ case class DedupSpanAudit(left: Expression, right: Expression, n: Int)
       }
       p += 1
     }
-    val d = md.digest()
-    val cs = new Array[Char](32)
-    var b = 0
-    while (b < 16) {
-      cs(2 * b) = hexDigits((d(b) >> 4) & 0xf)
-      cs(2 * b + 1) = hexDigits(d(b) & 0xf)
-      b += 1
-    }
-    new GenericInternalRow(Array[Any](removed, UTF8String.fromString(new String(cs))))
+    new GenericInternalRow(Array[Any](removed, Md5Hex.utf8(md.digest())))
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DedupSpanAudit =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,12 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why an expression: the regexp_count/array_contains per-row form this
   * replaces paid a Java-regex scan per document and still touched every
   * token several times; the explode+agg form before it shuffled the
-  * token stream. One compiled byte-level pass does all four counts at
-  * scan speed with zero exchanges — pinned in ExtSpec against the
-  * explode+agg reference. */
+  * token stream. One compiled byte-level pass ([[GopherCounts.counts]],
+  * called from eval and generated code; the stop list rides into the
+  * generated code as a reference object) does all four counts at scan
+  * speed with zero exchanges — pinned in ExtSpec against the explode+agg
+  * reference. */
 case class GopherCounts(child: Expression, stops: Seq[String])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes {
   require(stops.nonEmpty && stops.size <= 64, "need 1..64 stop words")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
@@ -33,17 +37,26 @@ case class GopherCounts(child: Expression, stops: Seq[String])
     StructField("n_alpha", LongType, nullable = false),
     StructField("n_stop", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"GopherCounts needs array<string> tokens, got $t")
-  }
-
   private val stopKeys: Array[UTF8String] =
     stops.map(UTF8String.fromString).toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    GopherCounts.counts(input.asInstanceOf[ArrayData], stopKeys)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val keys = ctx.addReferenceObj(
+      "stopKeys", stopKeys, classOf[Array[UTF8String]].getCanonicalName)
+    defineCodeGen(ctx, ev, c => s"graft.functions.GopherCounts.counts($c, $keys)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
+    copy(child = newChild)
+}
+
+object GopherCounts {
+
+  /** Row kernel (also the codegen target). */
+  def counts(arr: ArrayData, stopKeys: Array[UTF8String]): InternalRow = {
     val n = arr.numElements()
     var sumLen = 0L
     var nAlpha = 0L
@@ -72,7 +85,4 @@ case class GopherCounts(child: Expression, stops: Seq[String])
     new GenericInternalRow(Array[Any](
       n.toLong, sumLen, nAlpha, java.lang.Long.bitCount(stopMask).toLong))
   }
-
-  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
-    copy(child = newChild)
 }

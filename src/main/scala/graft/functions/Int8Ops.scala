@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Symmetric int8 scalar quantization as codegen'd Catalyst kernels — the
+/** Symmetric int8 scalar quantization as Catalyst kernels — the
   * serving-side companions of the `embed_quantize` audit query: pack a
   * float embedding into one signed byte per dimension ([[QuantizeInt8]]),
   * and dot a packed code against a full-width query vector
@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * bounded by scale/2 (scale = max|x|/127), so a cosine UPPER bound per
   * vector follows from the int8 dot plus the accumulated error term —
   * candidates are pruned on 1-byte codes and only survivors ever touch
-  * full-width floats.
+  * full-width floats. Each kernel is one JVM function on its companion
+  * that eval and the generated code both call.
   *
   * Quantization rule (bit-identical to `embed_quantize`'s Column form):
   * m = max|x_i| over double-widened elements; q_i = floor(x_i·127/m + 0.5)
@@ -39,10 +40,21 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
       s"QuantizeInt8 needs array<float|double> input, got $t")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    QuantizeInt8.quantize(input.asInstanceOf[ArrayData], elemFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.QuantizeInt8.quantize($c, $elemFloat)")
+
+  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
+    copy(child = newChild)
+}
+
+object QuantizeInt8 {
+
+  /** Row kernel (also the codegen target). */
+  def quantize(a: ArrayData, isFloat: Boolean): Array[Byte] = {
     val n = a.numElements()
-    val isFloat = elemFloat
     var m = 0.0
     var i = 0
     while (i < n) {
@@ -62,35 +74,6 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      val get =
-        if (elemFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |double $m = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = java.lang.Math.abs($get);
-         |  if ($x > $m) $m = $x;
-         |}
-         |byte[] $out = new byte[$n];
-         |if ($m != 0.0) {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $out[$i] = (byte) java.lang.Math.floor($get * 127.0 / $m + 0.5);
-         |  }
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
-    copy(child = newChild)
 }
 
 /** Dot product of an int8-packed code (BinaryType, one signed byte per
@@ -113,11 +96,22 @@ case class Int8Dot(left: Expression, right: Expression) extends BinaryExpression
       s"Int8Dot needs (binary, array<float|double>) inputs, got $l / $r")
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val code = l.asInstanceOf[Array[Byte]]
-    val q = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    Int8Dot.dot(l.asInstanceOf[Array[Byte]], r.asInstanceOf[ArrayData], rightFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Int8Dot.dot($a, $b, $rightFloat)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Int8Dot =
+    copy(left = newLeft, right = newRight)
+}
+
+object Int8Dot {
+
+  /** Row kernel (also the codegen target). */
+  def dot(code: Array[Byte], q: ArrayData, isFloat: Boolean): Double = {
     val n = math.min(code.length, q.numElements())
-    val isFloat = rightFloat
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -127,27 +121,6 @@ case class Int8Dot(left: Expression, right: Expression) extends BinaryExpression
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val get =
-        if (rightFloat) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.length, $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((double) $a[$i]) * $get;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Int8Dot =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Column-level entry points for the int8 kernels. */

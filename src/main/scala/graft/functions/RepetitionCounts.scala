@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Token and word-k-gram total/distinct counts of a token-array column
   * in ONE compiled per-row pass — the counting kernel of
@@ -15,15 +16,18 @@ import org.apache.spark.sql.types._
   * `array_distinct` deduplicates non-primitive elements (strings,
   * structs) by PAIRWISE comparison — O(len²) per document — which the
   * 8×-corpus probe exposed as a data-proportional slowdown exactly where
-  * long documents live. This pass uses hash sets: O(len) per document,
-  * zero exchanges, scan speed at any document length. Gram identity is
-  * the space-joined token run, the same string `shingleRows` produces
-  * (tokens cannot contain the joiner, so join is injective). Distinct
-  * counts over the multiset equal the explode+countDistinct aggregation
-  * by definition — pinned in ExtSpec. */
+  * long documents live. This pass ([[RepetitionCounts.counts]], called
+  * from eval and generated code) uses hash sets of the tokens' UTF-8
+  * bytes: O(len) per document, zero exchanges, scan speed at any
+  * document length. Gram identity is the space-joined token run, the
+  * same string `shingleRows` produces (tokens cannot contain the joiner,
+  * so join is injective). Distinct counts over the multiset equal the
+  * explode+countDistinct aggregation by definition — pinned in ExtSpec. */
 case class RepetitionCounts(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"gram width k=$k must be >= 1")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tok", IntegerType, nullable = false),
@@ -31,36 +35,36 @@ case class RepetitionCounts(child: Expression, k: Int)
     StructField("n_g", IntegerType, nullable = false),
     StructField("n_g_d", IntegerType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"RepetitionCounts needs array<string> tokens, got $t")
-  }
+  override def nullSafeEval(input: Any): Any =
+    RepetitionCounts.counts(input.asInstanceOf[ArrayData], k)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.RepetitionCounts.counts($c, $k)")
+
+  override protected def withNewChildInternal(newChild: Expression): RepetitionCounts =
+    copy(child = newChild)
+}
+
+object RepetitionCounts {
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** Row kernel (also the codegen target). */
+  def counts(arr: ArrayData, k: Int): InternalRow = {
     val n = arr.numElements()
-    val toks = new java.util.HashSet[String](Math.max(16, n * 2))
+    val toks = new java.util.HashSet[UTF8String](Math.max(16, n * 2))
     var i = 0
-    while (i < n) { toks.add(arr.getUTF8String(i).toString); i += 1 }
+    while (i < n) { toks.add(arr.getUTF8String(i)); i += 1 }
     val g = Math.max(n - k + 1, 0)
-    val grams = new java.util.HashSet[String](Math.max(16, g * 2))
-    val sb = new java.lang.StringBuilder
+    val grams = new java.util.HashSet[UTF8String](Math.max(16, g * 2))
+    val gram = new Array[UTF8String](k)
     var p = 0
     while (p < g) {
-      sb.setLength(0)
       var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(arr.getUTF8String(p + j).toString)
-        j += 1
-      }
-      grams.add(sb.toString)
+      while (j < k) { gram(j) = arr.getUTF8String(p + j); j += 1 }
+      grams.add(UTF8String.concatWs(Space, gram: _*))
       p += 1
     }
     new GenericInternalRow(Array[Any](n, toks.size, g, grams.size))
   }
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionCounts =
-    copy(child = newChild)
 }

@@ -9,12 +9,19 @@ import org.apache.spark.sql.types._
 /** Native dot product over two numeric array columns, with whole-stage
   * codegen (`doGenCode` emits a tight primitive loop). This is the hot
   * kernel of the similarity/near-dup operators: the higher-order-function
-  * formulation (`aggregate(zip_with(...))`, kept as
-  * [[VectorOps.dotHof]] for cross-checking) is CodegenFallback —
-  * interpreted per element — and measured ~40× slower on the pairwise
-  * near-dup bench at sf0.1.
+  * formulation (`aggregate(zip_with(...))`, kept in VectorDotSpec for
+  * cross-checking) is CodegenFallback — interpreted per element — and
+  * measured ~40× slower on the pairwise near-dup bench at sf0.1.
   *
-  * Semantics match `dotHof` bit-for-bit: each element is widened to double
+  * Unlike the other `graft.functions` kernels, the generated code keeps
+  * its own copy of the loop instead of calling one shared row function:
+  * that static call measured 5–7% slower on the pairwise queries
+  * (`dedup_embedding`, `sim_knn_graph`; alternating TimeQuery runs at
+  * sf0.1, 4 cores), most likely because one shared loop sees every
+  * caller's `ArrayData` class where each stage's inlined loop sees one.
+  * VectorDotPropSpec pins the two copies bit-equal.
+  *
+  * Semantics match the HOF form bit-for-bit: each element is widened to double
   * BEFORE the multiply and the accumulation runs sequentially left-to-right
   * (required for DuckDB-oracle parity). Array elements are assumed
   * non-null (dense embeddings); mismatched lengths use the shorter prefix

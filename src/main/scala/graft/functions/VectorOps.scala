@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector arithmetic over `ArrayType(FloatType)` columns. The
-  * hot kernel ([[dot]]) is the custom codegen expression [[VectorDot]];
-  * [[dotHof]] is the same math as stock higher-order functions
-  * (`aggregate(zip_with(...))` — CodegenFallback, interpreted, ~40× slower
-  * pairwise) kept as the cross-check reference.
+  * hot kernel ([[dot]]) is the custom expression [[VectorDot]]; the same
+  * math as stock higher-order functions (`aggregate(zip_with(...))` —
+  * CodegenFallback, interpreted, ~40× slower pairwise) lives in the test
+  * tree as the cross-check reference (VectorDotSpec).
   *
   * Both widen elements to double BEFORE multiplication and accumulate
   * sequentially, which makes dot products bit-reproducible across the two
@@ -15,18 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
-  /** Sequential-sum dot product in double precision (native codegen). */
+  /** Sequential-sum dot product in double precision. */
   def dot(a: Column, b: Column): Column =
     GraftColumnBridge.column(VectorDot(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
-
-  /** Same semantics via stock higher-order functions — the slow reference
-    * implementation [[dot]] is verified against (VectorDotSpec). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
 
   def normSq(a: Column): Column = dot(a, a)
 
@@ -37,25 +29,13 @@ object VectorOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Euclidean (L2) distance — interpreted HOF reference form
-    * (CodegenFallback; fine per-row, the known 40-150× trap per-pair).
-    * Hot per-pair paths use [[l2ViaDot]] instead; the two are
-    * property-pinned against each other in VectorDotSpec. */
-  def l2(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v))
-
   /** L2 via the dot identity ‖a−b‖² = ‖a‖² + ‖b‖² − 2a·b: every term runs
     * through the codegen [[VectorDot]] kernel. Cancellation can push the
     * identity fractionally negative for near-identical vectors — clamped
     * at 0. Callers that already carry per-side squared norms (k-means
     * assignment) should inline the identity instead, paying ONE dot per
-    * pair. */
+    * pair. The interpreted subtraction form it replaces is
+    * property-pinned against it in VectorDotSpec. */
   def l2ViaDot(a: Column, b: Column): Column =
     sqrt(greatest(normSq(a) + normSq(b) - lit(2.0) * dot(a, b), lit(0.0)))
 }

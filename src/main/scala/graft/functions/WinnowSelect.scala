@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,18 +18,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * (window min) → distinct Exchange: selection is per-document by
   * construction, so at 100 TB those were corpus-sized shuffles that
   * existed only to reassemble per-doc adjacency the source row already
-  * had. The expression is CodegenFallback — ONE interpreted dispatch per
-  * row with the whole selection in compiled JVM code — which measured
-  * equivalent-or-better than per-element interpreted HOF chains
-  * everywhere this repo compared them (guide §4: do the heavy lifting in
-  * native code).
+  * had. The whole selection is one JVM function per row
+  * ([[WinnowSelect.winnow]]) that eval and the generated code both call,
+  * so the enclosing operator stays in whole-stage codegen (guide §4: do
+  * the heavy lifting in native code).
   *
-  * Key comparisons use `String.compareTo`, identical to the SQL string
-  * ordering for these keys (hex digits + decimal digits are single-byte
-  * ASCII, where UTF-8 binary order ≡ UTF-16 code-unit order). The
+  * Keys are UTF8Strings compared by `compareTo` (UTF-8 binary order),
+  * which is the SQL string ordering Spark applies to them. The
   * 10⁶-position pad contract stays LOUD ([[graft.ext.Guards.padGuard]]'s
   * job in the old form): a doc with more than 10⁶ gram positions fails
-  * the job instead of silently corrupting the complement ordering.
+  * the job instead of silently corrupting the complement ordering, from
+  * the interpreted and the generated path alike.
   *
   * Returns: array<string> of distinct selected keys (32 hex chars ‖ 7 pad
   * digits), empty when the doc has fewer than w full windows; null input
@@ -39,22 +37,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * where row order is meaningless.
   */
 case class WinnowSelect(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"gram width k=$k must be >= 1")
   require(w >= 1, s"window width w=$w must be >= 1")
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"WinnowSelect needs array<string> tokens, got $t")
-  }
+  override def nullSafeEval(input: Any): Any =
+    WinnowSelect.winnow(input.asInstanceOf[ArrayData], k, w)
 
-  private val hexDigits = "0123456789abcdef".toCharArray
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowSelect.winnow($c, $k, $w)")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): WinnowSelect =
+    copy(child = newChild)
+}
+
+object WinnowSelect {
+
+  /** Row kernel (also the codegen target). */
+  def winnow(arr: ArrayData, k: Int, w: Int): ArrayData = {
     val n = arr.numElements()
     val g = n - k + 1 // gram positions 1..g
     if (g < w) return new GenericArrayData(Array.empty[Any])
@@ -62,33 +66,25 @@ case class WinnowSelect(child: Expression, k: Int, w: Int)
       s"winnowing: gram position exceeds the 1000000 pad contract (got $g)")
     val md = java.security.MessageDigest.getInstance("MD5")
     // kq(p) for 0-based gram start p: md5hex(gram) ‖ zero-padded 10⁶−(p+1)
-    val kq = new Array[String](g)
+    val kq = new Array[UTF8String](g)
     var p = 0
     while (p < g) {
-      md.reset()
       var j = 0
       while (j < k) {
         if (j > 0) md.update(' '.toByte)
         md.update(arr.getUTF8String(p + j).getBytes)
         j += 1
       }
-      val d = md.digest()
-      val cs = new Array[Char](39) // 32 hex + 7 pad digits
-      var i = 0
-      while (i < 16) {
-        cs(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-        cs(2 * i + 1) = hexDigits(d(i) & 0xf)
-        i += 1
-      }
+      val key = Md5Hex.bytes(md.digest(), 39) // 32 hex + 7 pad digits
       var comp = 1000000 - (p + 1)
-      i = 38
-      while (i >= 32) { cs(i) = ('0' + comp % 10).toChar; comp /= 10; i -= 1 }
-      kq(p) = new String(cs)
+      var i = 38
+      while (i >= 32) { key(i) = ('0' + comp % 10).toByte; comp /= 10; i -= 1 }
+      kq(p) = UTF8String.fromBytes(key)
       p += 1
     }
     // sliding min over windows [p-w+1, p] via monotonic deque; distinct
     // selections in first-encounter order
-    val out = new java.util.LinkedHashSet[String]()
+    val out = new java.util.LinkedHashSet[UTF8String]()
     val dq = new Array[Int](g)
     var head = 0
     var tail = 0 // exclusive
@@ -104,13 +100,6 @@ case class WinnowSelect(child: Expression, k: Int, w: Int)
       if (p >= w - 1) out.add(kq(dq(head)))
       p += 1
     }
-    val res = new Array[Any](out.size)
-    val it = out.iterator()
-    var i = 0
-    while (it.hasNext) { res(i) = UTF8String.fromString(it.next()); i += 1 }
-    new GenericArrayData(res)
+    new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
   }
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowSelect =
-    copy(child = newChild)
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side plan audit: print the physical plan of any registered
   * query by name (PERF.md methodology — "explain, then iterate until it's
   * the plan you'd want"). Usage:
@@ -18,11 +16,7 @@ import org.apache.spark.sql.SparkSession
   * `<dir>/<query>_<suffix>.txt` instead of stdout. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val mode =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side targeted timer: run ONE registered query against one or
   * more sf directories and print per-trial wall seconds (PERF.md scale-
   * probe methodology, without paying a full-surface Bench run). Executes
@@ -17,13 +15,8 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val names = args.head.split(',').toSeq // one query, or comma-separated batch
     val dirs = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val trials = sys.env.get("SPARK_GRAFT_TRIALS").flatMap(_.toIntOption).getOrElse(2)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     def run(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -5,16 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per JVM via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Harmless guard: if events.parquet is ever TIMESTAMP(NANOS) again it
-    // surfaces as a long (readers sniff and normalize); no-op for µs files.
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession("4")
 
   def sf(name: String): String = s"/root/testdata/$name"
 }

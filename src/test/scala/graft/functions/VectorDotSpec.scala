@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -9,13 +10,33 @@ import graft.queries.Registry.table
   * higher-order-function reference on real embedding data. */
 class VectorDotSpec extends SparkSpec {
 
+  /** Same semantics as [[VectorOps.dot]] via stock higher-order functions
+    * (interpreted): the slow reference the native kernel is checked
+    * against. */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0),
+      (acc, v) => acc + v)
+
+  /** Euclidean distance by element-wise subtraction (interpreted HOF):
+    * the reference form for [[VectorOps.l2ViaDot]]. */
+  private def l2(a: Column, b: Column): Column =
+    sqrt(aggregate(
+      zip_with(a, b, (x, y) => {
+        val d = x.cast("double") - y.cast("double")
+        d * d
+      }),
+      lit(0.0),
+      (acc, v) => acc + v))
+
   test("native dot == HOF dot, bit-exact, on all sf0.001 embedding pairs (sampled)") {
     val e = table(spark, sf("sf0.001"), "embeddings")
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
     val diffs = a.join(b, col("id_a") % 5 === 0 && col("id_b") % 7 === 0)
       .select(VectorOps.dot(col("ea"), col("eb")).as("native"),
-        VectorOps.dotHof(col("ea"), col("eb")).as("hof"))
+        dotHof(col("ea"), col("eb")).as("hof"))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(diffs == 0)
@@ -30,7 +51,7 @@ class VectorDotSpec extends SparkSpec {
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
     val maxDrift = a.join(b, col("id_a") % 5 === 0 && col("id_b") % 7 === 0)
       .select(abs(VectorOps.l2ViaDot(col("ea"), col("eb"))
-        - VectorOps.l2(col("ea"), col("eb"))).as("d"))
+        - l2(col("ea"), col("eb"))).as("d"))
       .agg(max("d")).collect().head.getDouble(0)
     assert(maxDrift < 1e-9, s"maxDrift=$maxDrift")
   }

@@ -121,6 +121,36 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("curation kernels compile: no CodegenFallback, each kernel's operator inside whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def kernels(p: SparkPlan) = p.expressions.flatMap(_.collect {
+      case k if k.getClass.getName.startsWith("graft.functions.") => k
+    })
+    // the operators fused into one stage: its subtree down to the
+    // InputAdapters that feed it
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(fused)
+    })
+    Seq("text_gopher_rules", "text_repetition", "text_cdc_chunks",
+      "dedup_winnow_pairs", "text_dedup_spans").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      df.collect() // materialize so AQE holds the FINAL plan
+      val plan = df.queryExecution.executedPlan
+      val holders = aqe.collect(plan) { case p if kernels(p).nonEmpty => p }
+      assert(holders.nonEmpty, s"$name: no graft.functions kernel in\n$plan")
+      val interpreted = holders.flatMap(kernels).filter(_.isInstanceOf[CodegenFallback])
+      assert(interpreted.isEmpty, s"$name: CodegenFallback kernels $interpreted")
+      val compiled = aqe.collect(plan) { case w: WholeStageCodegenExec => fused(w.child) }.flatten
+      holders.foreach { h =>
+        assert(compiled.exists(_ eq h), s"$name: ${h.nodeName} runs outside whole-stage codegen\n$plan")
+      }
+    }
+  }
+
   test("q22: scalar subquery broadcasts (no collect); NOT EXISTS plans as anti join") {
     val plan = explained("q22_dormant_customers")
     assert(plan.contains("LeftAnti"), plan)

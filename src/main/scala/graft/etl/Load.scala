@@ -17,7 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale posture: the DataFrame is persisted once before a multi-sink
   * fan-out (the reference re-serializes the table per sink,
-  * `load.py:288-322`), and sinks write partition-parallel —
+  * `load.py:288-322`), checked for emptiness once for all its sinks, and
+  * sinks write partition-parallel —
   * `singleFile=true` (reference parity: one `products.csv`) is for
   * sf-small outputs only.
   */
@@ -32,15 +33,21 @@ trait Sink {
   /** Write the frame, returning a location descriptor. Must throw
     * [[LoadError]] on an empty frame (reference `load.py:45-49`). */
   def write(df: DataFrame): String
+  /** Write a frame the caller has already found non-empty — the fan-out
+    * of [[Load.loadData]] checks once for all its sinks. The built-in
+    * sinks skip their own check here; any other sink just `write`s. */
+  private[etl] def writeNonEmpty(df: DataFrame): String = write(df)
+  private[etl] def emptyError: LoadError =
+    LoadError(s"DataFrame is empty, nothing to save to $name")
   protected def requireNonEmpty(df: DataFrame): Unit =
-    if (df.isEmpty) throw LoadError(s"DataFrame is empty, nothing to save to $name")
+    if (df.isEmpty) throw emptyError
 }
 
 /** K1 — CSV sink (`/root/reference/utils/load.py:37-73`). */
 final case class CsvSink(path: String, singleFile: Boolean = false) extends Sink {
   val name = "csv"
-  def write(df: DataFrame): String = {
-    requireNonEmpty(df)
+  def write(df: DataFrame): String = { requireNonEmpty(df); writeNonEmpty(df) }
+  override private[etl] def writeNonEmpty(df: DataFrame): String = {
     val out = if (singleFile) df.coalesce(1) else df
     out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
     path
@@ -51,8 +58,8 @@ final case class CsvSink(path: String, singleFile: Boolean = false) extends Sink
   * file sink, used by the harness. */
 final case class ParquetSink(path: String) extends Sink {
   val name = "parquet"
-  def write(df: DataFrame): String = {
-    requireNonEmpty(df)
+  def write(df: DataFrame): String = { requireNonEmpty(df); writeNonEmpty(df) }
+  override private[etl] def writeNonEmpty(df: DataFrame): String = {
     df.write.mode(SaveMode.Overwrite).parquet(path)
     path
   }
@@ -73,8 +80,8 @@ final case class JdbcSink(url: String, table: String,
 
   private def qualified = schema.map(s => s"$s.$table").getOrElse(table)
 
-  def write(df: DataFrame): String = {
-    requireNonEmpty(df)
+  def write(df: DataFrame): String = { requireNonEmpty(df); writeNonEmpty(df) }
+  override private[etl] def writeNonEmpty(df: DataFrame): String = {
     // connection test before proceeding (load.py:209-211); failure surfaces
     // as this sink's error without touching the other sinks
     val conn =
@@ -111,15 +118,28 @@ object Load {
 
   /** K4 — multi-sink fan-out (`/root/reference/utils/load.py:245-324`).
     * Returns one `Try` per sink name; failures are isolated, success carries
-    * the sink's location descriptor. */
-  def loadData(df: DataFrame, sinks: Seq[Sink]): Map[String, Try[String]] = {
+    * the sink's location descriptor. The empty-frame guard runs once: an
+    * empty frame fails every sink with its [[LoadError]], as each sink's
+    * own guard would. */
+  def loadData(df: DataFrame, sinks: Seq[Sink]): Map[String, Try[String]] =
+    fanOut(df, sinks, guard = true)
+
+  /** [[loadData]] for a frame the caller has already found non-empty
+    * (`Pipeline.run` counts it): no guard job. */
+  private[etl] def loadNonEmpty(df: DataFrame, sinks: Seq[Sink]): Map[String, Try[String]] =
+    fanOut(df, sinks, guard = false)
+
+  private def fanOut(df: DataFrame, sinks: Seq[Sink],
+      guard: Boolean): Map[String, Try[String]] = {
     require(sinks.nonEmpty,
       "At least one destination (csv, sheets, or postgres) must be specified")
     // persist only if the caller hasn't already (Pipeline.run does)
-    val fanOut = sinks.size > 1 && df.storageLevel == StorageLevel.NONE
-    if (fanOut) df.persist(StorageLevel.MEMORY_AND_DISK)
-    try sinks.map(s => s.name -> Try(s.write(df))).toMap
-    finally if (fanOut) { df.unpersist(); () }
+    val persisted = sinks.size > 1 && df.storageLevel == StorageLevel.NONE
+    if (persisted) df.persist(StorageLevel.MEMORY_AND_DISK)
+    try
+      if (guard && df.isEmpty) sinks.map(s => s.name -> Failure(s.emptyError)).toMap
+      else sinks.map(s => s.name -> Try(s.writeNonEmpty(df))).toMap
+    finally if (persisted) { df.unpersist(); () }
   }
 
   /** Reference parity helper: failures as `{sink}_error` entries, like the

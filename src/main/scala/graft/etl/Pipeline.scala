@@ -11,8 +11,10 @@ import org.apache.spark.sql.DataFrame
   *   multi-sink load with per-sink isolation → summary.
   *
   * Where `main.py` materializes every stage eagerly, here the plan stays
-  * lazy end-to-end; the only actions are the empty-guards (cheap `limit(1)`
-  * jobs, `main.py:32-34`/`:40-42`) and the sink writes.
+  * lazy end-to-end; the only actions are the extract guard (a cheap
+  * `limit(1)` job, `main.py:32-34`), one count of the persisted clean
+  * frame (the transform guard, `main.py:40-42`, and the summary's row
+  * count at once) and the sink writes, which skip their own guards.
   */
 object Pipeline {
 
@@ -59,17 +61,19 @@ object Pipeline {
 
   /** Full run. `extract` is any raw-products producer (the HTML flatMap
     * path, the DSv2 source, or a synthetic table). The clean frame is
-    * persisted across the guard, the sink writes, and the row count — with
-    * a real scrape source an unpersisted lineage would re-extract once per
-    * action. */
+    * persisted across its count and the sink writes — with a real scrape
+    * source an unpersisted lineage would re-extract once per action. The
+    * count fills the cache, decides the transform guard and is the
+    * summary's row count, so no sink re-checks for emptiness. */
   def run(extract: => DataFrame, plan: SinkPlan): Outcome = {
     val raw = extract
     if (raw.isEmpty) return EmptyExtract
     val clean = Transform.transform(raw)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (clean.isEmpty) EmptyTransform
-      else Loaded(Load.loadData(clean, plan.sinks), clean.count())
+      val rows = clean.count()
+      if (rows == 0) EmptyTransform
+      else Loaded(Load.loadNonEmpty(clean, plan.sinks), rows)
     } finally { clean.unpersist(); () }
   }
 

@@ -57,8 +57,8 @@ final case class SheetsSink(
   private def newTitle() =
     s"Products ETL ${java.time.LocalDate.now()}" // load.py:121 strftime twin
 
-  def write(df: DataFrame): String = {
-    requireNonEmpty(df)
+  def write(df: DataFrame): String = { requireNonEmpty(df); writeNonEmpty(df) }
+  override private[etl] def writeNonEmpty(df: DataFrame): String = {
     // credentials must exist before any API call (load.py:107-109)
     if (!new java.io.File(credentialsPath).exists())
       throw LoadError(s"Credentials file not found: $credentialsPath")

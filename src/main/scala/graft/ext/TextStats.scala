@@ -67,16 +67,22 @@ object TextStats {
     * first narrow cut (regexp_count + array_contains built-ins) re-read
     * every token several times, which the 8× probe showed as a
     * data-proportional constant worth removing. Value-identical to the
-    * explode+agg form — pinned in ExtSpec. */
-  def gopherTokenStats(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * explode+agg form — pinned in ExtSpec.
+    *
+    * `scalars` are further per-row columns (name → expression) computed in
+    * the same projection, after the four counts — how `text_gopher_rules`
+    * reads each document row once. */
+  def gopherTokenStats(docs: org.apache.spark.sql.DataFrame,
+      scalars: (String, Column)*): org.apache.spark.sql.DataFrame = {
     val c = org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.GopherCounts(
         org.apache.spark.sql.GraftColumnBridge.expression(
           Dedup.tokens(col("text"))), GopherStops))
-    docs.select(col("doc_id"), c.as("gc"))
-      .select(col("doc_id"), col("gc.n_words").as("n_words"),
-        col("gc.sum_len").as("sum_len"), col("gc.n_alpha").as("n_alpha"),
-        col("gc.n_stop").as("n_stop"))
+    docs.select(Seq(col("doc_id"), c.as("gc")) ++
+        scalars.map { case (n, e) => e.as(n) }: _*)
+      .select(Seq(col("doc_id")) ++
+        Seq("n_words", "sum_len", "n_alpha", "n_stop").map(f => col(s"gc.$f").as(f)) ++
+        scalars.map { case (n, _) => col(n) }: _*)
   }
 
   // ---------------------------------------------------------- repetition
@@ -382,8 +388,7 @@ object TextStats {
 
   private def postingsOf(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     IngestRecipe.clustered(
-        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-            explode(col("toks")).as("term"))
+        toks.select(col("doc_id"), docLen, explode(col("toks")).as("term"))
           .select(termBucket(col("term")).as("tb"), col("term"), col("doc_id"), col("dl")),
         Seq("tb"))
       .groupBy("tb", "term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
@@ -394,7 +399,10 @@ object TextStats {
     docLensOf(tokenized(docs))
 
   private def docLensOf(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+    toks.select(col("doc_id"), docLen)
+
+  /** A doc's length in tokens, from its token array. */
+  private def docLen: Column = size(col("toks")).cast("long").as("dl")
 
   /** A batch's positional posting rows: (tb, term, doc_id, pos) per token
     * OCCURRENCE, pos 0-based over the [a-z]+ token stream — the same
@@ -459,14 +467,19 @@ object TextStats {
         IngestRecipe.IndexPart(s"$indexPath/stats", Bm25StatsSchema, statsRow)
           -> batchKey)) {
       case Seq(basePostings, _, _, _) =>
+        // the probe reads the token checkpoint: a doc's postings rows
+        // are its distinct terms, so n_terms is their count and novelty
+        // their anti-join with the base vocabulary; a null token array
+        // (null text) has no terms
         val baseVocab = basePostings.select("term").distinct()
-        val perDoc = post.groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
-        val novel = post.join(baseVocab, Seq("term"), "left_anti")
+        val terms = toks.select(col("doc_id"), docLen,
+          array_distinct(coalesce(col("toks"), typedLit(Array.empty[String]))).as("terms"))
+        val novel = terms.select(col("doc_id"), explode(col("terms")).as("term"))
+          .join(baseVocab, Seq("term"), "left_anti")
           .groupBy("doc_id").agg(count(lit(1)).as("n_new_terms"))
-        dlr.join(perDoc, Seq("doc_id"), "left")
-          .join(novel, Seq("doc_id"), "left")
+        terms.join(novel, Seq("doc_id"), "left")
           .select(col("doc_id"), col("dl"),
-            coalesce(col("n_terms"), lit(0L)).as("n_terms"),
+            size(col("terms")).cast("long").as("n_terms"),
             coalesce(col("n_new_terms"), lit(0L)).as("n_new_terms"))
     }
   }

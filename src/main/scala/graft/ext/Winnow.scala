@@ -100,24 +100,50 @@ object Winnow {
     * same hub-exclusion contract as graph_link_predict's, applied
     * identically by the oracle) but still count in each doc's |fp|
     * total. Serves both the inline query and the standing-index form —
-    * identical output by construction. */
+    * identical output by construction.
+    *
+    * Plan shape: the rows are hash-partitioned ONCE on `fh`; the
+    * per-(doc, fh) distinct, the fingerprint frequency, the frequency
+    * join and the pair self-join all read that one exchange (every
+    * branch reuses it), so the kernel pass and the input scan run once.
+    * The doc key travels as two non-null columns, `dn` (doc_id is null)
+    * and `dv` (doc_id, 0 for null): a null-intolerant use of a nullable
+    * doc_id (the pair order, the sizes join) makes Catalyst infer an
+    * isnotnull(doc_id) filter and push it below the exchange in those
+    * branches only, while the frequency branch must still count null-doc
+    * rows, and the exchange would split in two. Null docs keep their old
+    * meaning: they count in `nd`, pair with nothing and carry no size into
+    * the output. A nullable `fh` (an index read) still gets its inferred
+    * filter, so that form reads its input twice; null hashes never join
+    * and count in |fp|, as before. */
   def pairsFrom(fps0: DataFrame, minShared: Int = 2, maxDf: Int = 50): DataFrame = {
-    val fps = fps0.select("doc_id", "fh").distinct()
+    val fps = fps0
+      .select(col("doc_id").isNull.as("dn"), coalesce(col("doc_id"), lit(0)).as("dv"),
+        col("fh"))
+      .repartition(col("fh"))
+      .distinct()
     val freq = fps.groupBy("fh").agg(count(lit(1)).as("nd"))
-    val sizes = fps.groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
+    val sizes = fps.groupBy("dn", "dv").agg(count(lit(1)).as("n_fp"))
     val joinable = fps.join(freq.hint("shuffle_hash"), "fh")
       .filter(col("nd") >= 2 && col("nd") <= maxDf)
-      .select("doc_id", "fh")
+      .select("dn", "dv", "fh")
+    // a null doc sorts after every doc as the left side and before every
+    // doc as the right one, so it pairs with nothing — one comparison
+    // across the two sides: a per-side filter would be pushed below the
+    // exchange, and an equality would become a join key that
+    // re-partitions both sides
+    def order(side: String, nullAs: Long): Column =
+      when(col(s"$side.dn"), lit(nullAs)).otherwise(col(s"$side.dv"))
     joinable.as("a")
       .join(joinable.as("b").hint("shuffle_hash"),
-        col("a.fh") === col("b.fh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        col("a.fh") === col("b.fh") && order("a", Long.MaxValue) < order("b", Long.MinValue))
+      .groupBy(col("a.dn").as("dn"), col("a.dv").as("doc_a"), col("b.dv").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_fp").as("n_a"))
-        .hint("shuffle_hash"), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_fp").as("n_b"))
-        .hint("shuffle_hash"), "doc_b")
+      .join(sizes.select(col("dn"), col("dv").as("doc_a"), col("n_fp").as("n_a"))
+        .hint("shuffle_hash"), Seq("dn", "doc_a"))
+      .join(sizes.select(col("dn"), col("dv").as("doc_b"), col("n_fp").as("n_b"))
+        .hint("shuffle_hash"), Seq("dn", "doc_b"))
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("n_a"), col("n_b"),
         round(col("n_shared").cast("double") / least(col("n_a"), col("n_b")), 4)
           .as("containment"))

@@ -102,11 +102,19 @@ object CurationQueries {
       .select(col("doc_id"), col("c.h").as("h"), col("c.clen").as("clen"))
   }
 
-  /** The per-doc rollup the registered query serves. */
+  /** The per-doc rollup the registered query serves. The chunk rows are
+    * hash-partitioned ONCE on `h`: the per-(doc, h) aggregate, the chunk
+    * frequency and the frequency join all read that one exchange (the
+    * frequency branch reuses it), so the kernel pass and the documents
+    * scan run once. `nd` counts `mx`, not `1`: the two agree (`clen` is
+    * never null, so neither is `mx`), and reading `mx` keeps `clen` in
+    * the frequency branch's exchange input — pruned, that input would
+    * differ from the main branch's and the exchange would split in two. */
   private[graft] def cdcChunkStats(docs: DataFrame): DataFrame = {
-    val perDh = cdcChunks(docs).groupBy("doc_id", "h")
+    val perDh = cdcChunks(docs).repartition(col("h"))
+      .groupBy("doc_id", "h")
       .agg(count(lit(1)).as("cnt"), max("clen").as("mx"))
-    val freq = perDh.groupBy("h").agg(count(lit(1)).as("nd"))
+    val freq = perDh.groupBy("h").agg(count(col("mx")).as("nd"))
     perDh.join(freq.hint("shuffle_hash"), "h")
       .groupBy("doc_id")
       .agg(sum("cnt").as("n_chunks"), max("mx").as("max_len"),

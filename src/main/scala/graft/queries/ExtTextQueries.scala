@@ -57,20 +57,22 @@ object ExtTextQueries {
     // a letter, ≥ 2 distinct Gopher stop-words. Every rule is an EXACT
     // integer comparison (10·n_sym ≤ n_words instead of a float ratio), so
     // the flags are bit-deterministic cross-engine with zero float math.
-    // Plan: scalar regexp counts ride the scan; the token stats are one
-    // doc-keyed explode+agg (the same single exchange as text_repetition);
-    // one doc-keyed join. Line rules use explicit (^|\n) groups — no
-    // multiline-flag semantics to diverge between Java and RE2.
+    // Plan: one projection of each documents row — the token stats (one
+    // compiled pass, TextStats.gopherTokenStats) and the five scalar regexp
+    // counts ride the scan together; the only exchange is the output
+    // sort. Null doc_id rows are dropped, as the oracle's doc-keyed join
+    // drops them (doc_id is the key of documents). Line rules use
+    // explicit (^|\n) groups — no multiline-flag semantics to diverge
+    // between Java and RE2.
     "text_gopher_rules" -> Q(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val scal = docs.select(col("doc_id"),
-          regexp_count(col("text"), lit("#")).as("n_hash"),
-          regexp_count(col("text"), lit("\\.\\.\\.")).as("n_ell"),
-          (regexp_count(col("text"), lit("\n")) + 1).as("n_lines"),
-          regexp_count(col("text"), lit("(^|\n)[ \t]*[-*•]")).as("n_bullet"),
-          regexp_count(col("text"), lit("\\.\\.\\.[ \t]*(\n|\\z)")).as("n_ellend"))
-        TextStats.gopherTokenStats(docs).join(scal, "doc_id")
+        val docs = table(s, dir, "documents").filter(col("doc_id").isNotNull)
+        TextStats.gopherTokenStats(docs,
+            "n_hash" -> regexp_count(col("text"), lit("#")),
+            "n_ell" -> regexp_count(col("text"), lit("\\.\\.\\.")),
+            "n_lines" -> (regexp_count(col("text"), lit("\n")) + 1),
+            "n_bullet" -> regexp_count(col("text"), lit("(^|\n)[ \t]*[-*•]")),
+            "n_ellend" -> regexp_count(col("text"), lit("\\.\\.\\.[ \t]*(\n|\\z)")))
           .select(col("doc_id"), col("n_words"),
             when(col("n_words").between(50, 100000), 1).otherwise(0).as("r_wordcount"),
             when(col("sum_len") >= col("n_words") * 3 &&

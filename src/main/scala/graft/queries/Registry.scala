@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One harness-registered query: a Spark plan builder plus (when the
   * semantics are ANSI-SQL-expressible) the equivalent DuckDB SQL the driver
@@ -25,13 +26,44 @@ object Registry {
     * smoke harness). It is safe under concurrent queries even then: the
     * conf is only ever written with the same value ("true") and never
     * unset, so racing writers are idempotent — but it IS a session-global
-    * mutation at plan time, which is why graft's own sessions pre-set it. */
+    * mutation at plan time, which is why graft's own sessions pre-set it.
+    *
+    * The schema is read once per session and path: parquet schema
+    * inference is a Spark job, and every registered query reads its
+    * tables through here. The memo is keyed on the path's modification
+    * time (for a directory, the newest of it and its entries) and on the
+    * nanos conf, so a rewritten table is inferred again; the file
+    * listing itself stays per call. A path that cannot be stat'ed is read
+    * without the memo, so a missing table fails as before. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events" &&
         !spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    schemaOf(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[(String, Long, String), StructType]]
+
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] =
+    modified(spark, path).map { stamp =>
+      val key = (path, stamp,
+        spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse(""))
+      val memo = schemas.synchronized {
+        schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap)
+      }
+      memo.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    }
+
+  private def modified(spark: SparkSession, path: String): Option[Long] =
+    scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      if (st.isDirectory) (st +: fs.listStatus(p).toSeq).map(_.getModificationTime).max
+      else st.getModificationTime
+    }.toOption
 
   /** `events` with `ts` normalized to a microsecond timestamp. The harness
     * file is TIMESTAMP(NANOS) and surfaces as a nanos long (see [[table]]) —

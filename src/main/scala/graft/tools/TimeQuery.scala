@@ -29,7 +29,7 @@ object TimeQuery {
       graft.queries.Warmup.artifacts(spark, dir)
       for (name <- names) {
         val ts = (1 to trials).map(_ => run(name, dir))
-        println(f"[time] $name $dir trials=${ts.map(t => f"$t%.2f").mkString(",")} min=${ts.min}%.2f")
+        println(f"[time] $name $dir trials=${ts.map(t => f"$t%.3f").mkString(",")} min=${ts.min}%.3f")
       }
     }
     spark.stop()

@@ -96,4 +96,51 @@ class PipelineSpec extends SparkSpec {
     val outcome = Pipeline.run(rawFixture, plan)
     assert(Pipeline.summary(outcome, plan)("sheets") == "pipe-sheet")
   }
+
+  test("a three-sink run checks emptiness once: at most 7 Spark jobs, same rows in every sink") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_pipe_jobs").toString
+    (1 to 30).map { i =>
+      if (i % 4 == 0) RawProduct("Unknown Product", "N/A", "N/A", "", "", "", "2023-10-01")
+      else RawProduct(s"Product $i", f"$$${i * 3}%d.99", s"${i % 5}.5 / 5", s"${i % 4} Colors",
+        "Size: M", "Gender: Unisex", "2023-10-01")
+    }.toDF().repartition(3).write.parquet(s"$root/raw")
+    val derby = "jdbc:derby:memory:graftpipejobs;create=true"
+    val plan = Pipeline.SinkPlan(Seq(CsvSink(s"$root/csv", singleFile = true),
+      ParquetSink(s"$root/pq"), JdbcSink(derby, "PRODUCTS")), Map.empty)
+    val raw = spark.read.parquet(s"$root/raw") // its schema read is not the run's
+    var outcome: Pipeline.Outcome = null
+    val jobs = jobsOf { outcome = Pipeline.run(raw, plan); () }
+    val want = Transform.transform(raw).collect().map(_.toString).sorted.toSeq
+    outcome match {
+      case l: Pipeline.Loaded =>
+        assert(l.success, l.results)
+        assert(l.rows == want.size.toLong && want.nonEmpty)
+      case other => fail(s"unexpected $other")
+    }
+    assert(jobs <= 7, s"the three-sink run took $jobs Spark jobs")
+    val clean = graft.model.Schemas.clean
+    Seq(spark.read.option("header", "true").schema(clean).csv(s"$root/csv"),
+      spark.read.parquet(s"$root/pq"),
+      spark.read.jdbc(derby, "PRODUCTS", new java.util.Properties)).foreach { df =>
+      val got = df.select(clean.fieldNames.map(df.col): _*).collect().map(_.toString).sorted.toSeq
+      assert(got == want)
+    }
+  }
+
+  test("loadData fails every sink on an empty frame, as each sink's own guard does") {
+    import spark.implicits._
+    val empty = Seq.empty[graft.model.Product].toDF()
+    val root = Files.createTempDirectory("graft_pipe_empty").toString
+    val sinks = Seq(CsvSink(s"$root/csv"), ParquetSink(s"$root/pq"), JdbcSink("jdbc:none", "t"))
+    val results = Load.loadData(empty, sinks)
+    sinks.foreach { s =>
+      val own = intercept[LoadError](s.write(empty)).getMessage
+      results(s.name) match {
+        case scala.util.Failure(e: LoadError) => assert(e.getMessage == own)
+        case other => fail(s"${s.name}: unexpected $other")
+      }
+    }
+    assert(!new java.io.File(s"$root/csv").exists() && !new java.io.File(s"$root/pq").exists())
+  }
 }

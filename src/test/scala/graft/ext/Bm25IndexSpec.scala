@@ -179,38 +179,6 @@ class Bm25IndexSpec extends SparkSpec {
       Seq("hash", "join")).count() == 0L)
   }
 
-  /** Spark jobs `body` issues, counted by a SparkListener on a job group
-    * of its own. A sentinel job run afterwards flushes the asynchronous
-    * listener bus: events reach a listener in order, so once the
-    * sentinel's start arrives every earlier job start has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"bm25-jobs-${System.nanoTime()}"
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => counted.incrementAndGet(); ()
-          case g if g == s"$group-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-flush", "flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not deliver the sentinel job")
-      counted.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
-
   test("the index-served BM25 runs in at most four Spark jobs") {
     val root = java.nio.file.Files.createTempDirectory("graft_b25j").toString
     ingest(root, corpus.filter($"doc_id" <= 3), 0L)
@@ -310,6 +278,28 @@ class Bm25IndexSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("the commit probe reads token arrays: a null text gives n_terms 0, repeated terms count once, same as the postings form") {
+    // n_terms / n_new_terms come from array_distinct over the token
+    // array, which dedups strings through a hash set only while the
+    // element type has proper equals; a pairwise path would be O(n²)
+    assert(org.apache.spark.sql.catalyst.util.TypeUtils
+      .typeWithProperEquals(org.apache.spark.sql.types.StringType))
+    val b0 = corpus
+    val b1 = Seq[(Long, String)]((21L, null), (22L, "hash hash fresh fresh fresh"),
+      (23L, ""), (24L, "zeta eta zeta")).toDF("doc_id", "text")
+    val now = java.nio.file.Files.createTempDirectory("graft_b25nt").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_b25nr").toString
+    Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
+      ingest(now, b, i.toLong)
+      referenceIngest(b, s"$ref/idx", s"$ref/out", i.toLong)
+    }
+    assert(indexState(now, Seq(0L, 1L)) == indexState(ref, Seq(0L, 1L)))
+    val out = spark.read.schema(TextStats.Bm25OutSchema).parquet(s"$now/out/batch_id=1")
+      .select("doc_id", "n_terms", "n_new_terms").orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(out == Seq((21L, 0L, 0L), (22L, 2L, 1L), (23L, 0L, 0L), (24L, 2L, 2L)))
   }
 
   test("one commit adds at most one file per touched term bucket to postings and positions") {

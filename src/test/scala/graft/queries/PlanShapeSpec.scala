@@ -151,6 +151,33 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("curation steps read documents once: one scan, one kernel Generate, bounded shuffles; gopher joins nothing") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // (query, kernel Generates, shuffle exchanges at most): the dedup steps
+    // hash-partition their exploded rows once on the content hash, and
+    // every branch reuses that exchange
+    Seq(("text_cdc_chunks", 1, 4), ("dedup_winnow_pairs", 1, 6),
+        ("text_gopher_rules", 0, 1)).foreach { case (name, generates, shuffles) =>
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      df.collect() // materialize so AQE holds the FINAL plan
+      val plan = df.queryExecution.executedPlan
+      val scans = aqe.collect(plan) { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"$name scans documents ${scans.size} times\n$plan")
+      val gens = aqe.collect(plan) { case g: GenerateExec => g }
+      assert(gens.size == generates, s"$name runs ${gens.size} Generates\n$plan")
+      val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size <= shuffles, s"$name: ${exchanges.size} shuffle exchanges\n$plan")
+    }
+    val gopher = SparkEntry.queries("text_gopher_rules")(spark, sf("sf0.001"))
+    gopher.collect()
+    assert(aqe.collect(gopher.queryExecution.executedPlan) { case j: BaseJoinExec => j }.isEmpty,
+      s"text_gopher_rules must be one projection:\n${gopher.queryExecution.executedPlan}")
+  }
+
   test("q22: scalar subquery broadcasts (no collect); NOT EXISTS plans as anti join") {
     val plan = explained("q22_dormant_customers")
     assert(plan.contains("LeftAnti"), plan)

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-/** Registry integrity guards — no Spark session needed.
+/** Registry integrity guards (no Spark session needed), and the
+  * schema memo of [[Registry.table]] (the last two tests).
   *
   * The harness surface is assembled by `++` over per-area Maps, which
   * SILENTLY drops duplicates (later module wins) — and a careless edit
@@ -10,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * happened: an operator removal took three unrelated queries with it,
   * caught only by a full verify-count diff). These pins make both
   * failure modes loud. */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends SparkSpec {
 
   private val modules = Seq(
     "EtlQueries" -> EtlQueries.all,
@@ -111,5 +112,27 @@ class RegistrySpec extends AnyFunSuite {
       q.oracle.foreach(sql => assert(sql.trim.toUpperCase.startsWith("SELECT")
         || sql.trim.toUpperCase.startsWith("WITH"), s"$name: odd oracle SQL"))
     }
+  }
+
+  test("table() infers a path's schema once per session: a second read starts no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reg_memo").toString
+    spark.range(3).selectExpr("id AS doc_id", "'x' AS text")
+      .write.parquet(s"$dir/documents.parquet")
+    // control: the first read infers the schema, and that is a job
+    assert(jobsOf { Registry.table(spark, dir, "documents"); () } >= 1)
+    assert(jobsOf { Registry.table(spark, dir, "documents"); () } == 0)
+    assert(Registry.table(spark, dir, "documents").count() == 3)
+  }
+
+  test("table() reads a rewritten path with its new schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reg_rewrite").toString
+    val path = s"$dir/documents.parquet"
+    spark.range(2).selectExpr("id AS doc_id", "'x' AS text").write.parquet(path)
+    assert(Registry.table(spark, dir, "documents").columns.toSeq == Seq("doc_id", "text"))
+    spark.range(4).selectExpr("id AS doc_id", "'y' AS text", "id * 10 AS n_chars")
+      .write.mode("overwrite").parquet(path)
+    val back = Registry.table(spark, dir, "documents")
+    assert(back.columns.toSeq == Seq("doc_id", "text", "n_chars"))
+    assert(back.agg(org.apache.spark.sql.functions.sum("n_chars")).head().getLong(0) == 60L)
   }
 }

@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 import graft.functions.VectorOps
 
@@ -14,30 +16,27 @@ import graft.functions.VectorOps
   *
   * Scale shape: each leg reduces the corpus to its top-k with a
   * TakeOrdered (per-partition heaps then one k-row merge — never a global
-  * sort), so the fusion stage only ever sees 2·k rows. Ranks over those
-  * k-row sets come from a broadcast rank-join (1 + count of rows strictly
-  * ahead), NOT a row_number window: an unpartitioned window is a
-  * single-partition sort of whatever it touches, and the registry-wide
-  * plan sweep bans it. The full-outer fuse join is k-vs-k — negligible at
-  * any corpus size.
+  * sort) and is collected, so the fusion only ever sees 2·k rows. The two
+  * legs are independent, so they run at once, one thread each
+  * ([[IngestRecipe.runAll]]). Fusion runs on the driver ([[fuse]]): a
+  * leg's collected order IS its (score desc, id asc) order, so a doc's
+  * rank is its position, and the full-outer RRF merge of ≤ 2·k ids needs
+  * no Spark job. The old Spark tail (a broadcast rank self-join per leg,
+  * the outer join and a top-N: five single-task jobs) is kept in the test
+  * tree as the reference the driver tail is pinned bit-identical to.
   */
 object HybridSearch {
 
-  /** rank = 1 + |rows strictly ahead on (score desc, id asc)| over a
-    * k-row relation — window-free, broadcast, exactly row_number's
-    * semantics (both orderings are total, so ranks are 1..k). */
-  private[graft] def rankOf(df: DataFrame, idCol: String, scoreCol: String,
-      rkName: String): DataFrame = {
-    val a = df.select(col(idCol).as("rid"), col(scoreCol).as("rsc"))
-    val b = df.select(col(idCol).as("oid"), col(scoreCol).as("osc"))
-    a.join(broadcast(b),
-        col("osc") > col("rsc") ||
-          (col("osc") === col("rsc") && col("oid") < col("rid")),
-        "left")
-      .groupBy("rid")
-      .agg((count(col("oid")) + 1).cast("int").as(rkName))
-      .select(col("rid").as(idCol), col(rkName))
-  }
+  /** Schema of every single-query hybrid result. */
+  private val FusedSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("rrf", DoubleType, nullable = false),
+    StructField("lex_rk", IntegerType),
+    StructField("dense_rk", IntegerType)))
+
+  /** The ids of a k-row leg in its collected TakeOrdered order. */
+  private def idsOf(leg: DataFrame): Seq[Long] =
+    leg.select("doc_id").collect().map(_.getLong(0)).toSeq
 
   /** Top-`topN` fused results: (doc_id, rrf, lex_rk, dense_rk); a doc
     * missing from one leg's top-k contributes 0 from that leg and keeps
@@ -54,38 +53,47 @@ object HybridSearch {
     // never in the results. BM25 fetches k+1, so even when the query doc
     // lands in its own lexical top list both legs still contribute
     // exactly k ranked candidates — no query-dependent bias toward the
-    // dense leg. Each leg is CHECKPOINTED before the rank self-join, else
-    // the corpus-scale scan behind it would run once per join branch (the
-    // k-row result is the only thing worth keeping).
-    val lex0 = TextStats.bm25(docs, terms, k + 1)
+    // dense leg.
+    val lex = () => idsOf(TextStats.bm25(docs, terms, k + 1)
       .filter(col("doc_id") =!= qId)
-      .orderBy(desc("bm25"), asc("doc_id")).limit(k)
-      .localCheckpoint()
-    val q = embeddings.filter(col("vec_id") === qId)
-      .select(col("embedding").as("q_emb"))
-    val den0 = embeddings.filter(col("vec_id") =!= qId)
-      .join(broadcast(q))
-      .select(col("vec_id").as("doc_id"),
-        round(VectorOps.cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .orderBy(desc("cos"), asc("doc_id")).limit(k)
-      .localCheckpoint()
-    fuse(lex0, den0, topN, rrfK)
+      .orderBy(desc("bm25"), asc("doc_id")).limit(k))
+    val den = () => {
+      val q = embeddings.filter(col("vec_id") === qId)
+        .select(col("embedding").as("q_emb"))
+      idsOf(embeddings.filter(col("vec_id") =!= qId)
+        .join(broadcast(q))
+        .select(col("vec_id").as("doc_id"),
+          round(VectorOps.cosine(col("q_emb"), col("embedding")), 6).as("cos"))
+        .orderBy(desc("cos"), asc("doc_id")).limit(k))
+    }
+    val Seq(lexIds, denIds) = IngestRecipe.runAll(Seq(lex, den))
+    fuse(docs.sparkSession, lexIds, denIds, topN, rrfK)
   }
 
   /** The shared RRF fusion tail — ONE definition consumed by both the
     * corpus-direct [[hybridRrf]] and the index-served
-    * [[hybridRrfFromIndex]], so the two forms cannot drift: rank each
-    * k-row leg (window-free broadcast rank-join), full-outer fuse,
-    * 1/(rrfK + rank) sum with the truncated-list 0 contribution, top-N. */
-  def fuse(lex0: DataFrame, den0: DataFrame, topN: Int, rrfK: Int): DataFrame = {
-    val lex = rankOf(lex0, "doc_id", "bm25", "lex_rk")
-    val den = rankOf(den0, "doc_id", "cos", "dense_rk")
-    lex.join(den, Seq("doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK) + col("lex_rk")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("dense_rk")), lit(0.0)), 6))
-      .select(col("doc_id"), col("rrf"), col("lex_rk"), col("dense_rk"))
-      .orderBy(desc("rrf"), asc("doc_id")).limit(topN)
+    * [[hybridRrfFromIndex]], so the two forms cannot drift. Each leg is
+    * its ids in (score desc, id asc) order, so rank = position + 1 —
+    * row_number's semantics. A doc gets 1/(rrfK + rank) from each leg
+    * holding it (0 from the other, whose rank stays null), rounded to 6
+    * places HALF_UP as Spark's `round` does (through the double's decimal
+    * string), and the top `topN` by (rrf desc, doc_id asc) come back as a
+    * local frame of [[FusedSchema]]. */
+  def fuse(spark: SparkSession, lex: Seq[Long], den: Seq[Long], topN: Int,
+      rrfK: Int): DataFrame = {
+    def ranks(ids: Seq[Long]): Map[Long, Int] =
+      ids.zipWithIndex.map { case (id, i) => id -> (i + 1) }.toMap
+    val (lexRk, denRk) = (ranks(lex), ranks(den))
+    def part(rk: Option[Int]): Double = rk.fold(0.0)(r => 1.0 / (rrfK + r))
+    val top = (lex ++ den).distinct.map { id =>
+      val (l, d) = (lexRk.get(id), denRk.get(id))
+      val rrf = BigDecimal(part(l) + part(d))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (id, rrf, l, d)
+    }.sortBy { case (id, rrf, _, _) => (-rrf, id) }.take(topN)
+      .map { case (id, rrf, l, d) =>
+        Row(id, rrf, l.map(Int.box).orNull, d.map(Int.box).orNull) }
+    spark.createDataFrame(top.asJava, FusedSchema)
   }
 
   /** [[hybridRrf]] served from the STANDING artifacts — zero source-table
@@ -109,21 +117,22 @@ object HybridSearch {
     *     prunes that I/O when data clusters —
     *     [[Similarity.buildQuantIndex]].) Exactness is by bound
     *     admissibility, not by luck — QuantBoundSpec pins it. The query
-    *     vector itself is fetched from the index too, so the serve
-    *     touches ONLY artifacts.
+    *     vector itself is fetched from the index too (once, on the
+    *     driver), so the serve touches ONLY artifacts.
     *
-    * Fusion tail is [[fuse]] — shared with the direct form by
-    * construction, so index-served ≡ direct bit-identically. */
+    * The two legs run at once and are collected; the fusion tail is
+    * [[fuse]] on the driver — shared with the direct form by
+    * construction, so index-served ≡ direct bit-identically. A `qId`
+    * absent from the quant index gives an empty dense leg. */
   def hybridRrfFromIndex(postings: DataFrame, statsLedger: DataFrame,
       quantIdx: DataFrame, terms: Seq[String], qId: Long = 0L, k: Int = 30,
       topN: Int = 20, rrfK: Int = 60): DataFrame = {
-    val lex0 = TextStats.bm25FromIndex(postings, statsLedger, terms, k + 1)
+    val lex = () => idsOf(TextStats.bm25FromIndex(postings, statsLedger, terms, k + 1)
       .filter(col("doc_id") =!= qId)
-      .orderBy(desc("bm25"), asc("doc_id")).limit(k)
-      .localCheckpoint()
-    val den0 = Similarity.exactTopKPruned(quantIdx, qId, k)
-      .localCheckpoint()
-    fuse(lex0, den0, topN, rrfK)
+      .orderBy(desc("bm25"), asc("doc_id")).limit(k))
+    val den = () => idsOf(Similarity.exactTopKPruned(quantIdx, qId, k))
+    val Seq(lexIds, denIds) = IngestRecipe.runAll(Seq(lex, den))
+    fuse(postings.sparkSession, lexIds, denIds, topN, rrfK)
   }
 
   /** BATCHED index-served hybrid retrieval (judge directive r15 #2) —
@@ -143,8 +152,8 @@ object HybridSearch {
     *   - per-query top-k on BOTH legs via the native
     *     [[graft.plans.TopKPerGroup]] node (one hash exchange on q_id,
     *     bounded heaps — never a window sort);
-    *   - RRF fusion per q_id: k-vs-k full-outer join, same arithmetic as
-    *     [[fuse]], per-query top-N again via TopKPerGroup.
+    *   - RRF fusion per q_id: k-vs-k full-outer join, the arithmetic of
+    *     [[fuse]] in Spark, per-query top-N again via TopKPerGroup.
     *
     * Index scans are therefore O(1) in B, not O(B) — the property that
     * matters when real traffic hits a 100 TB index. The per-query doc

@@ -29,15 +29,37 @@ import org.apache.spark.sql.types.StructType
   *      replayed batch rewrites the same files instead of re-appending;
   *   3. append the batch's rows to each index component (O(delta) files;
   *      partitioned components are clustered on their partition columns
-  *      first, so each touched bucket gains one file per commit). The
-  *      parts are independent, so their appends run at once, one thread
-  *      each, and step 3 returns only when every part has finished.
+  *      first, so each touched bucket gains one file per commit).
   *
-  * Step 2 always precedes step 3. Within step 3 the parts land in no set
-  * order, so a crash can leave ANY subset of the parts appended — not
-  * only a prefix of their list. Each part's own anti-join in step 1
-  * covers every such subset: a replay probes each component's pre-crash
-  * base whether or not that component's append landed.
+  * In [[applyBatch]] steps 2 and 3 run at once, one thread for the probe
+  * and its output write and one per part ([[runAll]]), and the call
+  * returns only when all have finished. That is safe because step 1 is
+  * done first, on the calling thread: each base's files are listed when
+  * it is read, so an append landing meanwhile is not in any base, and the
+  * probe sees exactly the pre-crash bases. A crash (or a failing probe,
+  * rethrown only after every part has finished) can therefore leave ANY
+  * subset of {output, part 1, …, part n} written — parts without the
+  * output, the output without parts, or some parts only. Each part's own
+  * anti-join in step 1 covers every such subset: a replay probes each
+  * component's pre-crash base whether or not that component's append
+  * landed, and rewrites the output in full. A probe that fails thus
+  * leaves the batch's parts appended, so a check that must reject a
+  * batch without writing anything runs before [[applyBatch]], not in its
+  * probe. [[applyBatchMergeFromOutput]] keeps steps 2 and 3 in order (its merge
+  * is read back from the output), with its parts appended at once.
+  *
+  * The seven [[applyBatch]] callers were audited for the concurrent
+  * form: every probe reads the standing index only through its bases
+  * (plus the batch's own frames), and every part's rows are built from
+  * the batch before the call, never from the probe's result or output:
+  * Dedup.dedupIngestBatch (banded + shingles from the shingle
+  * checkpoint), Dedup.boilerplateIngestBatch (chunk checkpoint),
+  * Dedup.semanticIngestBatch (assignment checkpoint),
+  * Multimodal.phashIngestBatch (hash checkpoint), Winnow.ingestBatch
+  * (fingerprint checkpoint), Monitor.cusumIngestBatch (the batch's day
+  * facts; its conflict check runs before the call, so a rejected batch
+  * leaves the ledger untouched) and
+  * TextStats.bm25IngestBatch (token checkpoint and a local stats row).
   *
   * Step 3 stays append, so a replay can leave DUPLICATE rows in a
   * standing index — every consumer must be duplicate-tolerant
@@ -69,15 +91,17 @@ object IngestRecipe {
     * index's postings / doclens / positions anti-join on doc_id, its
     * corpus-stats ledger on batch_id. Paths with one key frame pass
     * `parts.map(_ -> keys)`. `probe` receives one pre-crash base per
-    * part, in order, and its result is the batch's exactly-once output;
-    * the parts' `rows` are appended after it, all parts at once. */
+    * part, in order, and its result is the batch's exactly-once output.
+    * The probe with its output write and the parts' appends run at once
+    * ([[runAll]], the probe first in task order); the bases are read
+    * before any of them starts. */
   def applyBatch(batchId: Long, outPath: String,
       parts: Seq[(IndexPart, DataFrame)])
       (probe: Seq[DataFrame] => DataFrame): Unit = {
     val bases = preCrashBases(
       parts.map { case (p, keys) => (p.path, p.schema, keys) })
-    writeBatchOutput(probe(bases), outPath, batchId)
-    appendParts(parts.map(_._1))
+    runAll((() => writeBatchOutput(probe(bases), outPath, batchId)) +:
+      parts.map { case (p, _) => () => append(p) })
   }
 
   /** Step 1, shared: each standing component anti-joined against ITS OWN
@@ -89,16 +113,14 @@ object IngestRecipe {
         .join(keys, keys.columns.toSeq, "left_anti")
     }
 
-  /** Step 3, shared: O(delta) append of the batch's rows to each index
-    * component, all parts at once ([[runAll]]); partitioned components
-    * are [[clustered]] so they land only in their footprint, one file per
-    * touched bucket. */
-  private def appendParts(parts: Seq[IndexPart]): Unit =
-    runAll(parts.map { p => () =>
-      val w = clustered(p.rows, p.partitionBy).write.mode("append")
-      (if (p.partitionBy.nonEmpty) w.partitionBy(p.partitionBy: _*) else w)
-        .parquet(p.path)
-    })
+  /** Step 3 for one part: O(delta) append of the batch's rows; a
+    * partitioned component is [[clustered]] so it lands only in its
+    * footprint, one file per touched bucket. */
+  private def append(p: IndexPart): Unit = {
+    val w = clustered(p.rows, p.partitionBy).write.mode("append")
+    (if (p.partitionBy.nonEmpty) w.partitionBy(p.partitionBy: _*) else w)
+      .parquet(p.path)
+  }
 
   /** `df` hash-partitioned on `cols` into the session's default
     * parallelism (unchanged when `cols` is empty): a `partitionBy` write
@@ -111,20 +133,23 @@ object IngestRecipe {
     else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
       cols.map(col): _*)
 
-  /** Run `tasks` at once, one fresh thread each, and return when all have
-    * finished. Fresh threads, not a pool: a thread copies its parent's
-    * Spark local properties when it is created, so every job a task
-    * starts carries the caller's job group, streaming query and batch
-    * ids, and any tracing key. A failure never cuts the others short:
-    * the first failed task's exception (in task order) is rethrown after
-    * all of them have finished, the later ones suppressed onto it. */
-  private def runAll(tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
+  /** Run `tasks` at once, one fresh thread each, and return their
+    * results, in task order, when all have finished. Fresh threads, not a
+    * pool: a thread copies its parent's Spark local properties when it is
+    * created, so every job a task starts carries the caller's job group,
+    * streaming query and batch ids, and any tracing key. A failure never
+    * cuts the others short: the first failed task's exception (in task
+    * order) is rethrown after all of them have finished, the later ones
+    * suppressed onto it. Serves the recipe's steps 2 and 3, [[compactAll]]
+    * and the two legs of a hybrid serve ([[HybridSearch]]). */
+  private[graft] def runAll[T](tasks: Seq[() => T]): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
     else {
+      val results = new Array[Any](tasks.size)
       val failures = new Array[Throwable](tasks.size)
       val threads = tasks.zipWithIndex.map { case (task, i) =>
         val t = new Thread(() =>
-          try task() catch { case e: Throwable => failures(i) = e },
+          try results(i) = task() catch { case e: Throwable => failures(i) = e },
           s"ingest-recipe-part-$i")
         t.setDaemon(true)
         t.start()
@@ -139,7 +164,7 @@ object IngestRecipe {
         throw e
       }
       failures.filter(_ != null) match {
-        case Array() =>
+        case Array() => results.toSeq.map(_.asInstanceOf[T])
         case Array(first, rest @ _*) =>
           rest.foreach(first.addSuppressed)
           throw first
@@ -171,7 +196,7 @@ object IngestRecipe {
     writeBatchOutput(probe(bases), outPath, batchId)
     val outBack = probeParts.head._3.sparkSession.read.schema(outSchema)
       .parquet(s"$outPath/batch_id=$batchId")
-    appendParts(merge(outBack))
+    runAll(merge(outBack).map(p => () => append(p)))
   }
 
   /** Move a fully written `staged` directory over `target`: delete the

@@ -85,12 +85,16 @@ object Monitor {
   private def readLedger(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val rows = ParquetIO.readOrEmpty(spark, path, ledgerSchema).dropDuplicates()
-    val conflicts = rows.groupBy("event_type", "d").count()
-      .filter(col("count") > 1).count()
+    val conflicts = conflictCount(rows)
     require(conflicts == 0,
       s"cusum ledger $path: $conflicts (event_type, day) key(s) carry conflicting counts")
     rows
   }
+
+  /** The (type, day) keys of a deduplicated fact frame that carry more
+    * than one count: one tiny aggregate job. */
+  private def conflictCount(facts: DataFrame): Long =
+    facts.groupBy("event_type", "d").count().filter(col("count") > 1).count()
 
   /** One finalized-daily-counts micro-batch through the CUSUM monitor,
     * exactly-once on the [[IngestRecipe]] seam:
@@ -110,24 +114,26 @@ object Monitor {
       .join(baselineMu, Seq("event_type"), "left_anti").count()
     require(missing == 0,
       s"cusumIngestBatch: $missing event type(s) in the batch have no baseline μ")
+    // The probe's input is the ledger anti-joined on the batch's keys ∪
+    // the batch. Full-row dedup over it absorbs replay duplicates AND
+    // bit-identical duplicate day rows within one batch (readLedger's
+    // semantics), so only genuinely DISAGREEING counts on one (type, day)
+    // — only possible through misuse — fail loudly (a subset-keyed dedup
+    // would pick a survivor nondeterministically). Checked before
+    // applyBatch, whose probe runs beside the ledger append: a rejected
+    // batch leaves the ledger untouched.
+    val keys = facts.select("event_type", "d")
+    def probeInput(base: DataFrame) = base.unionByName(facts).dropDuplicates()
+    val conflicts = conflictCount(probeInput(
+      ParquetIO.readOrEmpty(batch.sparkSession, ledgerPath, ledgerSchema)
+        .join(keys, keys.columns.toSeq, "left_anti")))
+    require(conflicts == 0,
+      s"cusumIngestBatch: $conflicts (event_type, day) key(s) carry conflicting counts")
     IngestRecipe.applyBatch(batchId, outPath,
-      Seq(IngestRecipe.IndexPart(ledgerPath, ledgerSchema, facts)
-        -> facts.select("event_type", "d"))) {
+      Seq(IngestRecipe.IndexPart(ledgerPath, ledgerSchema, facts) -> keys)) {
       case Seq(base) =>
-        // base is already anti-joined on the batch's keys; full-row dedup
-        // over base ∪ facts absorbs replay duplicates AND bit-identical
-        // duplicate day rows within one batch (readLedger's semantics),
-        // so only genuinely DISAGREEING counts on one (type, day) — only
-        // possible through misuse — fail loudly here (a subset-keyed
-        // dedup would pick a survivor nondeterministically)
-        val all = base.unionByName(facts).dropDuplicates()
-        val conflicts = all.groupBy("event_type", "d").count()
-          .filter(col("count") > 1).count()
-        require(conflicts == 0,
-          s"cusumIngestBatch: $conflicts (event_type, day) key(s) carry conflicting counts")
-        cusumCore(all.join(broadcast(baselineMu), "event_type"))
-          .join(facts.select("event_type", "d"), Seq("event_type", "d"),
-            "left_semi")
+        cusumCore(probeInput(base).join(broadcast(baselineMu), "event_type"))
+          .join(keys, Seq("event_type", "d"), "left_semi")
           .orderBy("event_type", "d")
     }
   }

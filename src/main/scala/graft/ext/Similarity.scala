@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -569,7 +569,8 @@ object Similarity {
     * Three stages, all artifact-only:
     *
     *  1. '''Bounds pass''' (1-byte codes, no float column): for every
-    *     vector, dot the int8 code against the query ([[Int8Dot]]) and
+    *     vector, dot the int8 code against the query's literal vector
+    *     ([[Int8Dot]]) and
     *     bound the true dot by ±(scale/2)·‖q‖₁ — admissible because the
     *     per-dimension reconstruction error of the quantizer is ≤ scale/2
     *     ([[QuantizeInt8]]; scalacheck-pinned in QuantBoundSpec). Dividing
@@ -594,43 +595,65 @@ object Similarity {
     *     registered flat layout skips that on purpose — see the measured
     *     layout note on [[buildQuantIndex]].
     *
-    * Zero-norm rows (absent from the harness corpus) propagate NaN
-    * bounds; Spark orders NaN above every double, so such rows are
+    * The query row (its vector and stored norms) is read ONCE, on the
+    * driver ([[quantQuery]], one small job), and enters the bounds pass
+    * and the rerank as literals: no broadcast of the query row. A `qId`
+    * absent from the index gives an empty top-k, with no job beyond that
+    * read.
+    *
+    * Rows with a NaN element (absent from the harness corpus) propagate
+    * NaN bounds; Spark orders NaN above every double, so such rows are
     * conservatively KEPT as candidates and the rerank scores them with
-    * the same NaN the brute scan would — never silently dropped. */
+    * the same NaN the brute scan would — never silently dropped. A
+    * zero-norm row fails the serve under ANSI division by zero, as it
+    * fails the brute scan. */
   def exactTopKPruned(quantIdx: DataFrame, qId: Long = 0L,
-      k: Int = 30): DataFrame = {
-    val q = quantQuery(quantIdx, qId)
-    quantIdx.select("vec_id", "c_id", "embedding")
-      .join(broadcast(quantCandidates(quantIdx, qId, k)), Seq("c_id", "vec_id"))
-      .join(broadcast(q.select("q_emb")))
-      .select(col("vec_id").as("doc_id"),
-        round(VectorOps.cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .orderBy(desc("cos"), asc("doc_id")).limit(k)
+      k: Int = 30): DataFrame =
+    quantQuery(quantIdx, qId) match {
+      case None =>
+        quantIdx.select(col("vec_id").as("doc_id"), lit(null).cast("double").as("cos"))
+          .limit(0)
+      case Some(q) =>
+        quantIdx.select("vec_id", "c_id", "embedding")
+          .join(broadcast(quantCandidates(quantIdx, q, k)), Seq("c_id", "vec_id"))
+          .select(col("vec_id").as("doc_id"),
+            round(VectorOps.cosine(q.vector, col("embedding")), 6).as("cos"))
+          .orderBy(desc("cos"), asc("doc_id")).limit(k)
+    }
+
+  /** The query of the pruned serve, held on the driver: its id, its
+    * full-width vector and its stored exact norms (the L1 feeds the
+    * bound's error term). */
+  private[graft] final case class QuantQuery(id: Long, embedding: Seq[Float],
+      norm: Double, l1: Double) {
+    /** The vector as an array<float> literal. */
+    def vector: Column = typedLit(embedding)
   }
 
-  /** The 1-row query frame of the pruned serve: full-width vector plus
-    * its stored exact norms (the L1 feeds the bound's error term). */
-  private def quantQuery(quantIdx: DataFrame, qId: Long): DataFrame =
+  /** Read the query row of `qId` from the quantized index (one job: a
+    * `collect`, where `head(1)` would start a second job whenever the
+    * first partition it scans lacks the row); None when the index holds
+    * no vector for it. */
+  private[graft] def quantQuery(quantIdx: DataFrame, qId: Long): Option[QuantQuery] =
     quantIdx.filter(col("vec_id") === qId)
-      .select(col("embedding").as("q_emb"), col("norm").as("q_norm"),
-        col("l1").as("q_l1"))
+      .select("embedding", "norm", "l1").collect().headOption
+      .filterNot(_.isNullAt(0))
+      .map(r => QuantQuery(qId, r.getSeq[Float](0), r.getDouble(1), r.getDouble(2)))
 
   /** Stage-1 bounds frame of [[exactTopKPruned]]: per non-query vector,
     * (vec_id, c_id, lb, ub) with
     * lb/ub = (scale·int8dot ∓ ((scale/2)·‖q‖₁ + 1e-9)) / (‖q‖·‖x‖) —
-    * the float column NEVER enters this scan (only the broadcast 1-row
-    * query carries a full-width vector). Factored out so QuantBoundSpec
-    * pins the admissibility of the SERVED formula, not a copy. */
-  private[graft] def quantBounds(quantIdx: DataFrame, qId: Long): DataFrame = {
-    val denom = col("q_norm") * col("norm")
-    val err = col("scale") * lit(0.5) * col("q_l1") + lit(1e-9)
+    * the float column NEVER enters this scan (only the query's literal
+    * vector is full-width). Factored out so QuantBoundSpec pins the
+    * admissibility of the SERVED formula, not a copy. */
+  private[graft] def quantBounds(quantIdx: DataFrame, q: QuantQuery): DataFrame = {
+    val denom = lit(q.norm) * col("norm")
+    val err = col("scale") * lit(0.5) * lit(q.l1) + lit(1e-9)
     quantIdx
       .select("vec_id", "c_id", "qcode", "scale", "norm")
-      .filter(col("vec_id") =!= qId)
-      .join(broadcast(quantQuery(quantIdx, qId)))
+      .filter(col("vec_id") =!= q.id)
       .withColumn("dhat",
-        col("scale") * graft.functions.Int8Ops.int8Dot(col("qcode"), col("q_emb")))
+        col("scale") * graft.functions.Int8Ops.int8Dot(col("qcode"), q.vector))
       .select(col("vec_id"), col("c_id"),
         ((col("dhat") - err) / denom).as("lb"),
         ((col("dhat") + err) / denom).as("ub"))
@@ -641,7 +664,7 @@ object Similarity {
     * collect; empty corpus degenerates to keep-all via the −2 fallback,
     * cosine ∈ [−1,1]), keep every vector whose ub ≥ τ − 1e-6. Provably
     * ⊇ the true rounded top-k — see [[exactTopKPruned]]'s scaladoc. */
-  private[graft] def quantCandidates(quantIdx: DataFrame, qId: Long,
+  private[graft] def quantCandidates(quantIdx: DataFrame, q: QuantQuery,
       k: Int): DataFrame = {
     // τ and the ub filter BOTH consume the bounds frame, so the code
     // scan + Int8Dot pass runs twice per query. DELIBERATELY not
@@ -652,7 +675,7 @@ object Similarity {
     // candidate subtree's filtered parquet scan with a LogicalRDD — which
     // kills dynamic partition pruning on the partitioned layout
     // (spec-pinned). Two stateless cheap passes are the scale shape.
-    val bounds = quantBounds(quantIdx, qId)
+    val bounds = quantBounds(quantIdx, q)
     val tauF = bounds.select("lb").orderBy(desc("lb")).limit(k)
       .agg(coalesce(min("lb"), lit(-2.0)).as("tau"))
     bounds.crossJoin(broadcast(tauF))

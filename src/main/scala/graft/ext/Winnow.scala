@@ -113,13 +113,20 @@ object Winnow {
     * branches only, while the frequency branch must still count null-doc
     * rows, and the exchange would split in two. Null docs keep their old
     * meaning: they count in `nd`, pair with nothing and carry no size into
-    * the output. A nullable `fh` (an index read) still gets its inferred
-    * filter, so that form reads its input twice; null hashes never join
-    * and count in |fp|, as before. */
+    * the output. A nullable `fh` (every parquet read, so the index form)
+    * travels non-null too, for the same reason: a null hash becomes
+    * U+0000 ‖ doc_id, a key no 32-hex digest equals and no other doc
+    * shares, so it counts once in the doc's |fp|, reaches a frequency of
+    * 1 and joins nothing — what a null hash did before. A non-nullable
+    * `fh` (the inline form) is used as it is. */
   def pairsFrom(fps0: DataFrame, minShared: Int = 2, maxDf: Int = 50): DataFrame = {
+    val fh =
+      if (!fps0.schema("fh").nullable) col("fh")
+      else coalesce(col("fh"),
+        concat(lit("\u0000"), coalesce(col("doc_id").cast("string"), lit(""))))
     val fps = fps0
       .select(col("doc_id").isNull.as("dn"), coalesce(col("doc_id"), lit(0)).as("dv"),
-        col("fh"))
+        fh.as("fh"))
       .repartition(col("fh"))
       .distinct()
     val freq = fps.groupBy("fh").agg(count(lit(1)).as("nd"))

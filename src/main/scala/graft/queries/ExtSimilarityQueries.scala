@@ -1,6 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.ext.{Dedup, Indexing, Mining, Multimodal, Sessionize, Similarity, TextStats, Upsert}
 import graft.queries.ExtQueries._
@@ -11,6 +14,12 @@ import graft.queries.Registry.{events, table}
   * kNN graph, index maintenance + audits, embedding quantization/drift,
   * quality-filter training (incl. the hashed ingest-trained legs). */
 object ExtSimilarityQueries {
+
+  /** sim_topk_exact_pruned's result: (rk, neighbor_id, cos). */
+  private val ExactPrunedSchema = StructType(Seq(
+    StructField("rk", IntegerType, nullable = false),
+    StructField("neighbor_id", LongType),
+    StructField("cos", DoubleType)))
 
   val all: Map[String, Q] = Map(
     // --------------------------------------------------------- similarity
@@ -75,11 +84,11 @@ object ExtSimilarityQueries {
       (s, dir) => {
         val idx = s.read.schema(Similarity.QuantIndexSchema)
           .parquet(quantIndexPath(s, dir))
-        val topk = Similarity.exactTopKPruned(idx, 0L, 30).localCheckpoint()
-        topk.join(
-            graft.ext.HybridSearch.rankOf(topk, "doc_id", "cos", "rk"), "doc_id")
-          .select(col("rk"), col("doc_id").as("neighbor_id"), col("cos"))
-          .orderBy("rk")
+        // the collected top-k is in (cos desc, doc_id asc) order, so a
+        // neighbor's rank is its position (row_number's semantics)
+        val ranked = Similarity.exactTopKPruned(idx, 0L, 30).collect().toSeq
+          .zipWithIndex.map { case (r, i) => Row(i + 1, r.get(0), r.get(1)) }
+        s.createDataFrame(ranked.asJava, ExactPrunedSchema)
       },
       Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
              |scored AS (

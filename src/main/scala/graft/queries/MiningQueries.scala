@@ -29,8 +29,8 @@ object MiningQueries {
     * the k fused docs; at 100 TB this fetch is a keyed point-lookup into
     * an id-bucketed layout), then greedy token-budget packing in
     * (rrf DESC, doc_id, chunk_id) order until the 1024-token window is
-    * full — rank/cumsum as a ≤(k·chunks)² broadcast theta-join (the
-    * HybridSearch rankOf pattern; never an unpartitioned window). */
+    * full — rank/cumsum as a ≤(k·chunks)² broadcast theta-join (rank =
+    * 1 + rows strictly ahead; never an unpartitioned window). */
   private def ragContextTail(docs: org.apache.spark.sql.DataFrame,
       fused: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ch = docs.join(broadcast(fused.select("doc_id", "rrf")), "doc_id")
@@ -390,7 +390,7 @@ object MiningQueries {
     // fusion output is k-bounded (20 docs), so everything after retrieval
     // operates on a broadcast-scale frame — the chunk pass scans only the
     // semi-joined docs, and the rank/cumsum runs as a ≤(20·chunks)²
-    // broadcast theta-join (the HybridSearch rankOf pattern; no
+    // broadcast theta-join (rank = 1 + rows strictly ahead; no
     // unpartitioned window). Chunk order inside a doc is chunk_id; docs
     // order by (rrf DESC, doc_id) — fully deterministic, oracle-twinned.
     "search_rag_context" -> Q(
@@ -413,8 +413,9 @@ object MiningQueries {
     // nprobe ≈ nlist (PERF.md r15), so the honest oracle-shared serve
     // scans the index once; the truncated probed form stays available as
     // sim_topk_ivf_indexed under its candidate-persist oracle. Fusion is
-    // HybridSearch.fuse — shared with the direct form — and the oracle IS
-    // the direct form's: index-served ≡ corpus-direct, bit-identically.
+    // HybridSearch.fuse (on the driver) — shared with the direct form —
+    // and the oracle IS the direct form's: index-served ≡ corpus-direct,
+    // bit-identically.
     "search_hybrid_rrf_indexed" -> Q(
       (s, dir) => hybridFromIndex(s, dir),
       Some(graft.ext.HybridSearch.hybridRrfSql(

@@ -192,6 +192,24 @@ class Bm25IndexSpec extends SparkSpec {
     assert(n <= 4, s"bm25FromIndex issued $n Spark jobs, want at most 4")
   }
 
+  test("the index-served hybrid serve runs in at most eight Spark jobs") {
+    val root = java.nio.file.Files.createTempDirectory("graft_hyj").toString
+    ingest(root, corpus.filter($"doc_id" <= 3), 0L)
+    ingest(root, corpus.filter($"doc_id" > 3), 1L)
+    Similarity.buildQuantIndex(
+      spark.read.parquet(sf("sf0.001") + "/embeddings.parquet"), 16, s"$root/quant")
+    def hybrid(): DataFrame = HybridSearch.hybridRrfFromIndex(
+      readP(s"$root/idx/postings", TextStats.PostingSchema),
+      readP(s"$root/idx/stats", TextStats.Bm25StatsSchema),
+      spark.read.schema(Similarity.QuantIndexSchema).parquet(s"$root/quant"), terms)
+    hybrid().collect() // warm-up
+    // both legs are collected while the serve is built, on threads that
+    // inherit the counted job group; the fused frame is local
+    val n = jobsOf { hybrid().collect(); () }
+    assert(n > 0, "the listener saw no jobs: the count is not measuring")
+    assert(n <= 8, s"hybridRrfFromIndex issued $n Spark jobs, want at most 8")
+  }
+
   /** The ingest as it was before the single-checkpoint, clustered,
     * concurrent form: three checkpoints (batch, postings, doclens),
     * positions re-tokenized, the stats row a global aggregate, unclustered

@@ -360,8 +360,8 @@ class CompactionMatrixSpec extends SparkSpec {
     def ingest(r: String, id: Long): Unit =
       TextStats.bm25IngestBatch(docBatch(id), s"$r/idx", s"$r/out", id)
     Seq(torn, clean).foreach(ingest(_, 0L))
-    // TORN WINDOW: applyBatch writes the batch output first, then
-    // appends postings, doclens, positions and stats concurrently, so a
+    // TORN WINDOW: applyBatch writes the batch output while it appends
+    // postings, doclens, positions and stats, all concurrently, so a
     // death can leave any subset of them landed. This one: postings
     // landed, the others did not. Snapshot the last three components,
     // run batch 1 fully, restore the snapshots — output + postings carry
@@ -443,6 +443,50 @@ class CompactionMatrixSpec extends SparkSpec {
         rows(spark.read.schema(TextStats.Bm25OutSchema)
           .parquet(s"$clean/out/batch_id=$id")),
         s"torn concurrent append drifted batch $id's output partition")
+    }
+    Seq(torn, clean).foreach(r => TextStats.compactBm25Index(spark, s"$r/idx"))
+    TextStats.bm25Components("").foreach { case (c, _, sch, _) =>
+      assert(rows(readP(s"$torn/idx/$c", sch)) ==
+        rows(readP(s"$clean/idx/$c", sch)),
+        s"component $c differs from the never-interrupted fold after repair")
+    }
+  }
+
+  test("bm25: crash AFTER the concurrent append, before the batch output (all four parts landed, the output did not), then replay") {
+    def root(n: String) =
+      java.nio.file.Files.createTempDirectory(s"graft_torn_$n").toString
+    val torn = root("bme")
+    val clean = root("bmf")
+    def ingest(r: String, id: Long): Unit =
+      TextStats.bm25IngestBatch(docBatch(id), s"$r/idx", s"$r/out", id)
+    Seq(torn, clean).foreach(ingest(_, 0L))
+    // TORN WINDOW only a concurrent steps 2 and 3 can leave: every part
+    // appended while the probe's output write had not committed. Run
+    // batch 1 fully, then remove its output partition.
+    ingest(torn, 1L)
+    val conf = spark.sessionState.newHadoopConf()
+    val out1 = new org.apache.hadoop.fs.Path(s"$torn/out/batch_id=1")
+    out1.getFileSystem(conf).delete(out1, true)
+    // redelivery replays the whole batch
+    ingest(torn, 1L)
+    ingest(clean, 1L)
+    def served(r: String): Seq[String] =
+      rows(TextStats.bm25FromIndex(
+        readP(s"$r/idx/postings", TextStats.PostingSchema),
+        readP(s"$r/idx/stats", TextStats.Bm25StatsSchema),
+        Seq("t", "a", "g", "u"), topN = 10)) ++
+      rows(TextStats.phraseFromIndex(
+        readP(s"$r/idx/positions", TextStats.PositionSchema), Seq("t", "a"))) ++
+      Seq(TextStats.corpusStatsFromLedger(
+        readP(s"$r/idx/stats", TextStats.Bm25StatsSchema)).toString)
+    assert(served(torn) == served(clean),
+      "parts-without-output replay drifted the served BM25/phrase/stats")
+    Seq(0L, 1L).foreach { id =>
+      assert(rows(spark.read.schema(TextStats.Bm25OutSchema)
+          .parquet(s"$torn/out/batch_id=$id")) ==
+        rows(spark.read.schema(TextStats.Bm25OutSchema)
+          .parquet(s"$clean/out/batch_id=$id")),
+        s"parts-without-output replay drifted batch $id's output partition")
     }
     Seq(torn, clean).foreach(r => TextStats.compactBm25Index(spark, s"$r/idx"))
     TextStats.bm25Components("").foreach { case (c, _, sch, _) =>
@@ -595,5 +639,34 @@ class CompactionMatrixSpec extends SparkSpec {
     assert(mentions(two, "marker-a") && !mentions(two, "marker-b"), s"$two")
     assert(two.getSuppressed.exists(mentions(_, "marker-b")),
       s"the second failure is not suppressed on the first: ${two.getSuppressed.toSeq}")
+  }
+
+  test("applyBatch: a failing probe is rethrown only after every part finishes; the parts land, the output does not") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_probefail").toString
+    val nap = udf { (id: Long) => Thread.sleep(1500); id }
+    val slow = spark.range(0, 4, 1, 4)
+      .select(nap(col("id")).as("doc_id"), lit(1L).as("dl"))
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("probe-fail-marker"); id }
+    val e = intercept[Throwable] {
+      IngestRecipe.applyBatch(0L, s"$root/out", Seq(
+        IngestRecipe.IndexPart(s"$root/slow", TextStats.DocLenSchema, slow)
+          -> Seq(-1L).toDF("doc_id"))) {
+        case Seq(base) => base.select(boom(col("doc_id")).as("doc_id"))
+          .unionByName(spark.range(1).select(boom(col("id")).as("doc_id")))
+      }
+    }
+    val slowCommitted = new java.io.File(s"$root/slow/_SUCCESS").exists()
+    assert(slowCommitted, "the probe's failure was rethrown before the part finished")
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("probe-fail-marker")), s"$e")
+    assert(readP(s"$root/slow", TextStats.DocLenSchema).count() == 4L)
+    assert(!new java.io.File(s"$root/out/batch_id=0/_SUCCESS").exists(),
+      "a failed probe committed its output")
+    val alive = scala.jdk.CollectionConverters.SetHasAsScala(
+        Thread.getAllStackTraces.keySet).asScala
+      .filter(t => t.getName.startsWith("ingest-recipe-part-") && t.isAlive)
+    assert(alive.isEmpty, s"threads left running: $alive")
   }
 }

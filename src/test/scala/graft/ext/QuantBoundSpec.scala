@@ -61,7 +61,7 @@ class QuantBoundSpec extends SparkSpec {
       val truth = idx.filter(col("vec_id") =!= qId).join(broadcast(q))
         .select(col("vec_id"),
           VectorOps.cosine(col("q_emb"), col("embedding")).as("cos"))
-      val joined = Similarity.quantBounds(idx, qId)
+      val joined = Similarity.quantBounds(idx, Similarity.quantQuery(idx, qId).get)
         .join(truth, "vec_id")
         .select("vec_id", "lb", "cos", "ub").collect()
       assert(joined.nonEmpty)
@@ -116,7 +116,7 @@ class QuantBoundSpec extends SparkSpec {
       .select("vec_id", "embedding")
     val idx = Similarity.quantRows(emb, 16).localCheckpoint()
     val k = 30
-    val cands = Similarity.quantCandidates(idx, 0L, k)
+    val cands = Similarity.quantCandidates(idx, Similarity.quantQuery(idx, 0L).get, k)
       .select("vec_id").as[Long].collect().toSet
     val q = idx.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
     val top = idx.filter(col("vec_id") =!= 0L).join(broadcast(q))

@@ -117,6 +117,19 @@ class VectorDotPropSpec extends SparkSpec {
     assert(compiledOnly(guardMessage()).contains("1000000 pad contract"))
     assert(noCodegen(guardMessage()).contains("1000000 pad contract"))
   }
+
+  test("WinnowSelect at exactly 10⁶ gram positions passes on both paths") {
+    // 10⁶ equal grams in one 10⁶-wide window: the rightmost wins the tie,
+    // so the one selected key carries position 10⁶, padded as 10⁶ − 10⁶
+    val df = spark.range(1).select(
+      array_repeat(lit("a"), (col("id") + 1000000).cast("int")).as("toks"))
+    val sel = GraftColumnBridge.column(WinnowSelect(e("toks"), 1, 1000000))
+    def keys(): Seq[String] = df.select(sel).head().getSeq[String](0)
+    val compiled = compiledOnly(keys())
+    assert(compiled == noCodegen(keys()))
+    assert(compiled.size == 1 && compiled.head.length == 39 &&
+      compiled.head.endsWith("0000000"), s"$compiled")
+  }
 }
 
 object VectorDotPropSpec {

@@ -178,6 +178,33 @@ class PlanShapeSpec extends SparkSpec {
       s"text_gopher_rules must be one projection:\n${gopher.queryExecution.executedPlan}")
   }
 
+  test("dedup_winnow_indexed plans like the inline form: one index scan, six exchanges") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def shape(name: String) = {
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      df.collect() // materialize so AQE holds the FINAL plan
+      val plan = df.queryExecution.executedPlan
+      (aqe.collect(plan) { case s: FileSourceScanExec => s }.size,
+        aqe.collect(plan) { case g: GenerateExec => g }.size,
+        aqe.collect(plan) { case e: ShuffleExchangeExec => e }.size,
+        plan.toString)
+    }
+    // the index read's nullable fh travels as a non-null key, so no
+    // inferred isnotnull(fh) splits the shared fh exchange
+    val (iScans, iGens, iExchanges, iPlan) = shape("dedup_winnow_indexed")
+    assert((iScans, iGens, iExchanges) == (1, 0, 6),
+      s"indexed: $iScans scans, $iGens Generates, $iExchanges exchanges\n$iPlan")
+    assert(!iPlan.contains("isnotnull(fh"), iPlan)
+    // the inline form's fh is non-null and passes through untouched
+    val (scans, gens, exchanges, plan) = shape("dedup_winnow_pairs")
+    assert((scans, gens, exchanges) == (1, 1, 6),
+      s"inline: $scans scans, $gens Generates, $exchanges exchanges\n$plan")
+    assert(!plan.contains("coalesce(fh"), plan)
+  }
+
   test("q22: scalar subquery broadcasts (no collect); NOT EXISTS plans as anti join") {
     val plan = explained("q22_dormant_customers")
     assert(plan.contains("LeftAnti"), plan)

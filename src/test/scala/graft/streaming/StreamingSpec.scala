@@ -1211,6 +1211,37 @@ class StreamingSpec extends SparkSpec {
     assert(thrown.getMessage.contains("conflicting"), thrown.getMessage)
   }
 
+  test("cusum monitor: a batch rejected for conflicting counts writes nothing") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cusum_reject")
+    val ledger = root.resolve("ledger").toString
+    val out = root.resolve("out").toString
+    def day(i: Int) = java.sql.Date.valueOf(s"2024-01-0$i")
+    val mu = Seq(("x", 10000000L)).toDF("event_type", "mu6")
+    def ingest(id: Long, rows: (String, java.sql.Date, Long)*): Unit =
+      graft.ext.Monitor.cusumIngestBatch(rows.toDF("event_type", "d", "c"),
+        mu, ledger, out, id)
+    def ledgerRows = spark.read.parquet(ledger).collect().map(_.toString).sorted.toSeq
+    def rejected(id: Long, rows: (String, java.sql.Date, Long)*): Unit = {
+      val before = ledgerRows
+      val thrown = intercept[IllegalArgumentException](ingest(id, rows: _*))
+      assert(thrown.getMessage.contains("conflicting"), thrown.getMessage)
+      assert(ledgerRows == before, s"rejected batch $id changed the ledger")
+      assert(!new java.io.File(s"$out/batch_id=$id").exists(),
+        s"rejected batch $id wrote an output")
+    }
+    ingest(0L, ("x", day(1), 10L), ("x", day(2), 12L))
+    val history = graft.ext.Monitor.snapshot(spark, ledger, mu).collect().toSeq
+    // disagreeing counts within one batch: rejected before any write, so
+    // the ledger stays clean and the monitor keeps serving
+    rejected(1L, ("x", day(3), 5L), ("x", day(3), 6L))
+    assert(graft.ext.Monitor.snapshot(spark, ledger, mu).collect().toSeq == history)
+    // a ledger already broken by a re-shipped day rejects a later batch on
+    // another day, again before writing anything
+    ingest(2L, ("x", day(1), 999L))
+    rejected(3L, ("x", day(4), 7L))
+  }
+
   test("cusum stream: foreachBatch wiring lands the same alarm history") {
     import org.apache.spark.sql.functions._
     val daily = events(spark, dir)
